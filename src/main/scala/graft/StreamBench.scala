@@ -4,17 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
-/** Streaming-throughput micro-benchmark: pushes the synthesized log
-  * corpus through the full 5-way demux pipeline (parse → branch →
-  * topic routing → serialized value) under Structured Streaming
-  * micro-batches and reports rows/second.
-  *
-  * This is the apples-to-apples number against the reference's
-  * runtime model — a DStream app on `local[2]` with 5 s batches
-  * (`OdsBaseLogApp.scala:24-25`): same envelope JSON, same branch
-  * semantics, measured at the micro-batch boundary (MemoryStream →
-  * noop sink, so neither a broker nor a disk sits in the timed path).
-  * Not part of the driver contract — run manually:
+/** Streaming-throughput micro-benchmarks for the stateful and gating
+  * pipelines (ingest/semantic/quality gates, materialized view and the
+  * keyed monitors): each surface feeds MemoryStream micro-batches,
+  * times them after one warm-up batch, and appends one JSON line per
+  * metric to `SPARK_GRAFT_STREAMBENCH_OUT`. The log demux and CDC
+  * pipelines are measured by `ingestbench/` instead (latency and an
+  * output oracle included). Run manually:
   * `tools/run_class.sh graft.StreamBench`.
   */
 object StreamBench {
@@ -31,57 +27,14 @@ object StreamBench {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val lines = ops.GmallSynth
-      .logLinesFast(Tables.events(spark, sfDir))
-      .select("value").as[String].collect()
-    // batch size mirrors the reference's 5 s-interval regime (tens of
-    // thousands of rows per micro-batch), overridable for sweeps
-    val nBatches =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "4").toInt
-    val perBatch = lines.length / nBatches
-    require(perBatch > 0,
-      s"corpus of ${lines.length} lines cannot fill $nBatches batches")
-
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[String]
-    // Note: MemoryStream hands each micro-batch to the plan as one
-    // partition, but measurements show per-micro-batch PLANNING (not
-    // per-row work) dominates at these batch sizes — repartitioning
-    // the input to all cores moves the number < 10%. Larger batches
-    // (fewer planning rounds) raise throughput accordingly.
-    val q = streaming.LogPipeline
-      .demuxToTopicValue(in.toDF())
-      .writeStream.format("noop").outputMode("append")
-      .start()
-    try {
-      // warm the stream (codegen + state init) outside the timed region
-      in.addData(lines.take(perBatch))
-      q.processAllAvailable()
-      val t0 = System.nanoTime()
-      var i = perBatch
-      var timedBatches = 0
-      while (i < lines.length) {
-        in.addData(lines.slice(i, i + perBatch))
-        q.processAllAvailable()
-        i += perBatch
-        timedBatches += 1
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val n = lines.length - perBatch
-      val line =
-        s"""{"metric":"demux_stream_rows_per_sec","value":${(n / dt).toLong},""" +
-          s""""rows":$n,"seconds":$dt,"batches":$timedBatches,"sf":"$sfDir"}"""
-      println(line)
-      // per-round regression artifact (VERDICT r5 item 7): the same
-      // JSON goes to a file so streaming-path throughput is tracked
-      // round over round, not just printed once
-      val out = new java.io.File(sys.env.getOrElse(
-        "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-      Option(out.getParentFile).foreach(_.mkdirs())
-      java.nio.file.Files.writeString(out.toPath, line + "\n")
-    } finally q.stop()
+    // every surface appends its line: start the artifact empty
+    val out = new java.io.File(sys.env.getOrElse(
+      "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
+    Option(out.getParentFile).foreach(_.mkdirs())
+    java.nio.file.Files.writeString(out.toPath, "")
 
-    // Second surface: the streaming ingestion gate (exact hash gate +
+    // First surface: the streaming ingestion gate (exact hash gate +
     // near-dup signature gate vs an accumulating seen store) — docs/s
     // through IngestPipeline micro-batches, store growing as it runs.
     // Docs stream in deterministic doc_id order, quartered into
@@ -129,9 +82,7 @@ object StreamBench {
         s"""{"metric":"ingest_gate_docs_per_sec","value":${(n / dt).toLong},""" +
           s""""docs":$n,"admitted":$admitted,"seconds":$dt,"batches":$timed,"scale":$scale,"sf":"$sfDir"}"""
       println(line2)
-      val out2 = new java.io.File(sys.env.getOrElse(
-        "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-      java.nio.file.Files.writeString(out2.toPath, line2 + "\n",
+      java.nio.file.Files.writeString(out.toPath, line2 + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } finally gate.stop()
@@ -170,15 +121,13 @@ object StreamBench {
           s"""{"metric":"bloom_gate_docs_per_sec","value":${(n / dt).toLong},""" +
             s""""docs":$n,"admitted":$badmitted,"seconds":$dt,"batches":$timed,"m_bits":${1 << 18},"scale":$scale,"sf":"$sfDir"}"""
         println(lineB)
-        val outB = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(outB.toPath, lineB + "\n",
+        java.nio.file.Files.writeString(out.toPath, lineB + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally bgate.stop()
     }
 
-    // Third surface: the streaming SEMANTIC ingestion gate —
+    // Second surface: the streaming SEMANTIC ingestion gate —
     // vectors/s through SemanticIngestPipeline micro-batches against
     // the accumulating unit-vector artifact store (offline metadata
     // assignment: list = stored label, the deployment form without a
@@ -244,14 +193,12 @@ object StreamBench {
           s""""store":"parquet_list_id","partition_filtered":$partitionFiltered,""" +
           s""""scale":$scale,"sf":"$sfDir"}"""
       println(line3)
-      val out3 = new java.io.File(sys.env.getOrElse(
-        "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-      java.nio.file.Files.writeString(out3.toPath, line3 + "\n",
+      java.nio.file.Files.writeString(out.toPath, line3 + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } finally semGate.stop()
 
-    // Fourth surface: the streaming batch-level QUALITY gate — docs/s
+    // Third surface: the streaming batch-level QUALITY gate — docs/s
     // through QualityGatePipeline micro-batches (one-pass assertion
     // suite per batch, batch-level admit/quarantine). The suite here
     // mirrors the registered q_quality_assertions shape: completeness
@@ -293,14 +240,12 @@ object StreamBench {
         s"""{"metric":"quality_gate_docs_per_sec","value":${(n / dt).toLong},""" +
           s""""docs":$n,"admitted":$qgAdmitted,"rejected":$qgRejected,"seconds":$dt,"batches":$timed,"scale":$scale,"sf":"$sfDir"}"""
       println(line4)
-      val out4 = new java.io.File(sys.env.getOrElse(
-        "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-      java.nio.file.Files.writeString(out4.toPath, line4 + "\n",
+      java.nio.file.Files.writeString(out.toPath, line4 + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } finally qgate.stop()
 
-    // Fifth surface: the continuously-maintained materialized view —
+    // Fourth surface: the continuously-maintained materialized view —
     // CDC delta rows/s through MaterializedViewPipeline micro-batches
     // (per batch: stored-view read + exact-decimal merge + versioned
     // replace). Synthetic delta stream: inserts keyed over a bounded
@@ -341,14 +286,12 @@ object StreamBench {
         s"""{"metric":"mv_maintenance_deltas_per_sec","value":${(n / dt).toLong},""" +
           s""""deltas":$n,"view_rows":${mvStore.view.count()},"seconds":$dt,"batches":$nMvBatches,"scale":$scale,"sf":"$sfDir"}"""
       println(line5)
-      val out5 = new java.io.File(sys.env.getOrElse(
-        "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-      java.nio.file.Files.writeString(out5.toPath, line5 + "\n",
+      java.nio.file.Files.writeString(out.toPath, line5 + "\n",
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } finally mvQ.stop()
 
-    // Sixth surface: the per-feed CUSUM monitor — bucket rows/s
+    // Fifth surface: the per-feed CUSUM monitor — bucket rows/s
     // through the keyed flatMapGroupsWithState recurrence. Synthetic
     // stream: a bounded feed domain (state stays feed-sized) with
     // monotone per-feed buckets and a planted shift on one feed so
@@ -383,15 +326,13 @@ object StreamBench {
           s"""{"metric":"cusum_monitor_buckets_per_sec","value":${(n / dt).toLong},""" +
             s""""buckets":$n,"feeds":$feeds,"seconds":$dt,"batches":$nCuBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line6)
-        val out6 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out6.toPath, line6 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line6 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally cuQ.stop()
     }
 
-    // Seventh surface: the per-feed freshness-decay monitor — day
+    // Sixth surface: the per-feed freshness-decay monitor — day
     // rows/s through the one-long-of-state halving recurrence.
     // Bounded feed domain, monotone per-feed days, mixed gaps so the
     // shift path executes.
@@ -424,15 +365,13 @@ object StreamBench {
           s"""{"metric":"decay_monitor_days_per_sec","value":${(n / dt).toLong},""" +
             s""""days":$n,"feeds":$feeds,"seconds":$dt,"batches":$nDcBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line7)
-        val out7 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out7.toPath, line7 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line7 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally dcQ.stop()
     }
 
-    // Eighth surface: the CDC hot-key monitor — RAW change rows/s
+    // Seventh surface: the CDC hot-key monitor — RAW change rows/s
     // through the per-key decayed-mass recurrence (the continuous
     // form of Cdc.hotKeys). Zipf-ish skewed key draw over a bounded
     // domain (key 0 absorbs ~20% of the feed — the write-bottleneck
@@ -470,15 +409,13 @@ object StreamBench {
           s"""{"metric":"hotkey_monitor_changes_per_sec","value":${(n / dt).toLong},""" +
             s""""changes":$n,"keys":$keys,"seconds":$dt,"batches":$nHkBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line8)
-        val out8 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out8.toPath, line8 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line8 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally hkQ.stop()
     }
 
-    // Ninth surface: the CDC sequence-gap monitor — raw id rows/s
+    // Eighth surface: the CDC sequence-gap monitor — raw id rows/s
     // through the per-table island fold (the continuous form of
     // Cdc.sequenceGaps). The feed is the realistic binlog shape the
     // state bound relies on: mostly-contiguous ids per table with a
@@ -517,15 +454,13 @@ object StreamBench {
           s"""{"metric":"seqgap_monitor_ids_per_sec","value":${(n / dt).toLong},""" +
             s""""ids":$n,"tables":$tables,"seconds":$dt,"batches":$nSgBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line9)
-        val out9 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out9.toPath, line9 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line9 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally sgQ.stop()
     }
 
-    // Tenth surface: the incremental replica-checksum monitor — raw
+    // Ninth surface: the incremental replica-checksum monitor — raw
     // change rows/s through the per-bucket (count, Σhash mod 2⁶¹−1)
     // fold (the continuous form of Cdc.checksumDiff's replica side).
     // Deterministic I/U/D mix (8:1:1) over a 64-bucket fingerprint
@@ -562,15 +497,13 @@ object StreamBench {
           s"""{"metric":"checksum_monitor_changes_per_sec","value":${(n / dt).toLong},""" +
             s""""changes":$n,"buckets":$buckets,"seconds":$dt,"batches":$nCkBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line10)
-        val out10 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out10.toPath, line10 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line10 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally ckQ.stop()
     }
 
-    // Eleventh surface: the Holt–Winters forecast monitor — closed
+    // Tenth surface: the Holt–Winters forecast monitor — closed
     // daily counts/s through the per-type fixed-point smoothing fold
     // (the continuous form of Audit.holtWintersBacktest). Many types
     // × few days per batch is the realistic shape: the fold cost is
@@ -607,15 +540,13 @@ object StreamBench {
           s"""{"metric":"forecast_monitor_days_per_sec","value":${(n / dt).toLong},""" +
             s""""day_rows":$n,"types":$types,"seconds":$dt,"batches":$nFcBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line11)
-        val out11 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out11.toPath, line11 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line11 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally fcQ.stop()
     }
 
-    // Twelfth surface: the Western-Electric phase-II monitor —
+    // Eleventh surface: the Western-Electric phase-II monitor —
     // closed daily counts/s through the per-type frozen-baseline
     // rule evaluation (the continuous form of
     // Audit.westernElectricRules). Same many-types × few-days shape
@@ -658,15 +589,13 @@ object StreamBench {
           s"""{"metric":"we_rules_monitor_days_per_sec","value":${(n / dt).toLong},""" +
             s""""day_rows":$n,"types":$types,"seconds":$dt,"batches":$nWeBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line12)
-        val out12 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out12.toPath, line12 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line12 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally weQ.stop()
     }
 
-    // Thirteenth surface: the duplicate-delivery monitor — raw
+    // Twelfth surface: the duplicate-delivery monitor — raw
     // envelope lines/s through the per-table (value-hash → copies)
     // fold (the continuous form of Cdc.dupDeliveryProfile; the
     // reference producer is acks=1 with idempotence off, so
@@ -708,15 +637,13 @@ object StreamBench {
           s"""{"metric":"dup_delivery_monitor_lines_per_sec","value":${(n / dt).toLong},""" +
             s""""lines":$n,"tables":$tables,"seconds":$dt,"batches":$nDdBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line13)
-        val out13 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out13.toPath, line13 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line13 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally ddQ.stop()
     }
 
-    // Fourteenth surface: gap sessionization — raw events/s through
+    // Thirteenth surface: gap sessionization — raw events/s through
     // the per-user event-time session fold (flatMapGroupsWithState
     // with EventTimeTimeout; the reference's DWD session surface run
     // as keyed state). Each micro-batch advances event time a full
@@ -754,15 +681,13 @@ object StreamBench {
           s"""{"metric":"sessionize_events_per_sec","value":${(n / dt).toLong},""" +
             s""""events":$n,"users":$users,"seconds":$dt,"batches":$nSzBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line14)
-        val out14 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out14.toPath, line14 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line14 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       } finally szQ.stop()
     }
 
-    // Fifteenth surface: per-key token-bucket rate limiting — raw
+    // Fourteenth surface: per-key token-bucket rate limiting — raw
     // events/s through the keyed window/used fold (the admission
     // guard a multi-tenant ingest front-end runs per producer).
     // Each batch lands 10 events per user in a 5-event-capacity
@@ -799,9 +724,7 @@ object StreamBench {
           s"""{"metric":"rate_limit_events_per_sec","value":${(n / dt).toLong},""" +
             s""""events":$n,"users":$users,"seconds":$dt,"batches":$nRlBatches,"scale":$scale,"sf":"$sfDir"}"""
         println(line15)
-        val out15 = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_STREAMBENCH_OUT", "target/streambench.json"))
-        java.nio.file.Files.writeString(out15.toPath, line15 + "\n",
+        java.nio.file.Files.writeString(out.toPath, line15 + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
 
@@ -857,7 +780,7 @@ object StreamBench {
             s""""events":$nReject,"users":$users,"seconds":$rejectDt,"batches":$nSplit,"scale":$scale,"sf":"$sfDir"}"""
         println(line15a)
         println(line15b)
-        java.nio.file.Files.writeString(out15.toPath,
+        java.nio.file.Files.writeString(out.toPath,
           line15a + "\n" + line15b + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)

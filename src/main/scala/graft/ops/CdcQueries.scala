@@ -208,9 +208,7 @@ object CdcQueries {
           col("data")("id").cast("long").as("id"),
           col("op")
         )
-      // agg (max_by) form: map-side partial + AQE skew handling; the
-      // order key (id) is unique so it's equivalent to the window form
-      Cdc.lastWriteWinsAgg(dims, Seq(col("uid")), col("id"))
+      Cdc.lastWriteWins(dims, Seq(col("uid")), Seq(col("id")))
         .orderBy(col("uid"))
     }),
     // change tracking: one row per changed cell of each update

@@ -55,19 +55,11 @@ object Demux {
       .select(col("raw_value"), col("reason"))
   }
 
-  /** T3: error branch — whole record routed, nothing else extracted. */
-  def errors(parsed: DataFrame): DataFrame =
-    parsed
-      .filter(col("err").isNotNull)
-      .select(
-        col("common.mid").as("mid"),
-        col("err.error_code").as("error_code"),
-        col("err.msg").as("msg"),
-        col("ts")
-      )
-
-  private def nonError(parsed: DataFrame): DataFrame =
-    parsed.filter(col("err").isNull)
+  val ErrorTopic   = "DWD_ERROR_LOG"
+  val PageTopic    = "DWD_PAGE_LOG"
+  val DisplayTopic = "DWD_PAGE_DISPLAY"
+  val ActionTopic  = "DWD_PAGE_ACTION"
+  val StartTopic   = "DWD_START_LOG"
 
   /** T4 common projection, shared by every non-error branch
     * (`OdsBaseLogApp.scala:102-114`).
@@ -93,74 +85,90 @@ object Demux {
     col("page.source_type").as("source_type")
   )
 
-  /** T5: PageLog (16 cols, `bean/PageLog.scala:3-20`). */
-  def pages(parsed: DataFrame): DataFrame =
-    nonError(parsed)
-      .filter(col("page").isNotNull)
-      .select(commonCols ++ pageCols :+ col("ts"): _*)
+  /** One DWD record shape: the envelope rows it takes (`guard`), the
+    * envelope columns it keeps, and — for the exploded branches — the
+    * array it unnests (one record per element) with the element's
+    * (field, output name) pairs. Every record ends with the envelope
+    * `ts`.
+    */
+  private case class Branch(
+      guard: Column,
+      fields: Seq[Column],
+      unnest: Option[String] = None,
+      elemFields: Seq[(String, String)] = Nil
+  ) {
+    /** The record's columns, given the unnested element if any. */
+    def columns(elem: Option[Column]): Seq[Column] =
+      fields ++ elem.toSeq.flatMap(e => elemFields.map {
+        case (f, name) => e.getField(f).as(name)
+      }) :+ col("ts")
+  }
 
-  /** T6: correlated unnest of `displays` → PageDisplayLog (21 cols,
-    * `bean/PageDisplayLog.scala:3-26`). `explode` drops null/empty
-    * arrays — same as the reference's foreach over a present-only array
+  private val isErr = col("err").isNotNull
+  private val onPage = !isErr && col("page").isNotNull
+
+  /** The five branches, keyed by DWD topic in the reference's emit
+    * order; guards as in the object doc. The per-branch frames and the
+    * one-pass [[topicValues]] both read this table.
+    */
+  private val branches = scala.collection.immutable.ListMap(
+    // T3: error branch — whole record routed, nothing else extracted
+    ErrorTopic -> Branch(isErr, Seq(
+      col("common.mid").as("mid"),
+      col("err.error_code").as("error_code"),
+      col("err.msg").as("msg"))),
+    // T5: PageLog (16 cols, `bean/PageLog.scala:3-20`)
+    PageTopic -> Branch(onPage, commonCols ++ pageCols),
+    // T6: PageDisplayLog (21 cols, `bean/PageDisplayLog.scala:3-26`)
+    DisplayTopic -> Branch(onPage, commonCols ++ pageCols,
+      Some("displays"), Seq(
+        "display_type" -> "display_type",
+        "item" -> "display_item",
+        "item_type" -> "display_item_type",
+        "order" -> "display_order",
+        "pos_id" -> "display_pos_id")),
+    // T7: PageActionLog (20 cols; per-action ts kept alongside record
+    // ts, `OdsBaseLogApp.scala:163-165`)
+    ActionTopic -> Branch(onPage, commonCols ++ pageCols,
+      Some("actions"), Seq(
+        "action_id" -> "action_id",
+        "item" -> "action_item",
+        "item_type" -> "action_item_type",
+        "ts" -> "action_ts")),
+    // T8: StartLog (15 cols, `bean/StartLog.scala:3-19`)
+    StartTopic -> Branch(!isErr && col("start").isNotNull,
+      commonCols ++ Seq(
+        col("start.entry").as("entry"),
+        col("start.open_ad_id").as("open_ad_id"),
+        col("start.loading_time").as("loading_time_ms"),
+        col("start.open_ad_ms").as("open_ad_ms"),
+        col("start.open_ad_skip_ms").as("open_ad_skip_ms")))
+  )
+
+  /** One branch as its own frame. `explode` drops null/empty arrays —
+    * same as the reference's foreach over a present-only array
     * (`OdsBaseLogApp.scala:136-138`).
     */
-  def displays(parsed: DataFrame): DataFrame =
-    nonError(parsed)
-      .filter(col("page").isNotNull)
-      .select(
-        (commonCols ++ pageCols) :+
-          explode(col("displays")).as("d") :+ col("ts"): _*
-      )
-      .select(
-        col("mid"), col("user_id"), col("province_id"), col("channel"),
-        col("is_new"), col("model"), col("operate_system"),
-        col("version_code"), col("brand"), col("page_id"),
-        col("last_page_id"), col("page_item"), col("page_item_type"),
-        col("during_time"), col("source_type"),
-        col("d.display_type").as("display_type"),
-        col("d.item").as("display_item"),
-        col("d.item_type").as("display_item_type"),
-        col("d.order").as("display_order"),
-        col("d.pos_id").as("display_pos_id"),
-        col("ts")
-      )
+  private def branch(topic: String, parsed: DataFrame): DataFrame = {
+    val b = branches(topic)
+    val rows = parsed.filter(b.guard)
+    b.unnest match {
+      case None => rows.select(b.columns(None): _*)
+      case Some(arr) =>
+        rows.select(col("*"), explode(col(arr)).as("__elem"))
+          .select(b.columns(Some(col("__elem"))): _*)
+    }
+  }
 
-  /** T7: unnest of `actions` → PageActionLog (20 cols; per-action ts
-    * kept alongside record ts, `OdsBaseLogApp.scala:163-165`).
-    */
-  def actions(parsed: DataFrame): DataFrame =
-    nonError(parsed)
-      .filter(col("page").isNotNull)
-      .select(
-        (commonCols ++ pageCols) :+
-          explode(col("actions")).as("a") :+ col("ts"): _*
-      )
-      .select(
-        col("mid"), col("user_id"), col("province_id"), col("channel"),
-        col("is_new"), col("model"), col("operate_system"),
-        col("version_code"), col("brand"), col("page_id"),
-        col("last_page_id"), col("page_item"), col("page_item_type"),
-        col("during_time"), col("source_type"),
-        col("a.action_id").as("action_id"),
-        col("a.item").as("action_item"),
-        col("a.item_type").as("action_item_type"),
-        col("a.ts").as("action_ts"),
-        col("ts")
-      )
+  def errors(parsed: DataFrame): DataFrame = branch(ErrorTopic, parsed)
 
-  /** T8: StartLog (15 cols, `bean/StartLog.scala:3-19`). */
-  def starts(parsed: DataFrame): DataFrame =
-    nonError(parsed)
-      .filter(col("start").isNotNull)
-      .select(
-        commonCols :+
-          col("start.entry").as("entry") :+
-          col("start.open_ad_id").as("open_ad_id") :+
-          col("start.loading_time").as("loading_time_ms") :+
-          col("start.open_ad_ms").as("open_ad_ms") :+
-          col("start.open_ad_skip_ms").as("open_ad_skip_ms") :+
-          col("ts"): _*
-      )
+  def pages(parsed: DataFrame): DataFrame = branch(PageTopic, parsed)
+
+  def displays(parsed: DataFrame): DataFrame = branch(DisplayTopic, parsed)
+
+  def actions(parsed: DataFrame): DataFrame = branch(ActionTopic, parsed)
+
+  def starts(parsed: DataFrame): DataFrame = branch(StartTopic, parsed)
 
   // --- typed DWD surface (`Dataset[bean]`, the reference's
   // `bean/*.scala` case classes) — same plans as the untyped branch
@@ -223,64 +231,28 @@ object Demux {
     * cannot), so this form is what the 5 s-micro-batch pipeline
     * runs: one parse + one Generate per record, the exact shape of
     * the reference's per-record if/else (`OdsBaseLogApp.scala:
-    * 95-188`). Field names/order match the per-branch
-    * `toJsonValue(branch)` serialization bit-for-bit (differential
-    * spec asserts it).
+    * 95-188`). Built from the same branch table as the per-branch
+    * frames, so values match `toJsonValue(branch)` bit-for-bit
+    * (differential spec asserts it).
     */
-  def topicValues(
-      parsed: DataFrame,
-      errorTopic: String,
-      pageTopic: String,
-      displayTopic: String,
-      actionTopic: String,
-      startTopic: String
-  ): DataFrame = {
+  def topicValues(parsed: DataFrame): DataFrame = {
     def el(topic: String, payload: Column) =
       struct(lit(topic).as("topic"), to_json(payload).as("value"))
     val empty = array()
       .cast("array<struct<topic:string,value:string>>")
-    // the SAME projection vals the branch functions use — one
-    // definition keeps the one-pass output bit-for-bit aligned with
-    // toJsonValue(branch) (the differential spec pins it)
-    val commonS = commonCols
-    val pageS = pageCols
-    val isErr = col("err").isNotNull
-    val onPage = !isErr && col("page").isNotNull
-    val errArr = when(isErr, array(el(errorTopic, struct(
-      col("common.mid").as("mid"),
-      col("err.error_code").as("error_code"),
-      col("err.msg").as("msg"),
-      col("ts"))))).otherwise(empty)
-    val pageArr = when(onPage, array(el(pageTopic,
-      struct(commonS ++ pageS :+ col("ts"): _*)))).otherwise(empty)
-    val dispArr = when(onPage && col("displays").isNotNull,
-      transform(col("displays"), d => el(displayTopic, struct(
-        commonS ++ pageS ++ Seq(
-          d.getField("display_type").as("display_type"),
-          d.getField("item").as("display_item"),
-          d.getField("item_type").as("display_item_type"),
-          d.getField("order").as("display_order"),
-          d.getField("pos_id").as("display_pos_id"),
-          col("ts")): _*)))).otherwise(empty)
-    val actArr = when(onPage && col("actions").isNotNull,
-      transform(col("actions"), a => el(actionTopic, struct(
-        commonS ++ pageS ++ Seq(
-          a.getField("action_id").as("action_id"),
-          a.getField("item").as("action_item"),
-          a.getField("item_type").as("action_item_type"),
-          a.getField("ts").as("action_ts"),
-          col("ts")): _*)))).otherwise(empty)
-    val startArr = when(!isErr && col("start").isNotNull,
-      array(el(startTopic, struct(commonS ++ Seq(
-        col("start.entry").as("entry"),
-        col("start.open_ad_id").as("open_ad_id"),
-        col("start.loading_time").as("loading_time_ms"),
-        col("start.open_ad_ms").as("open_ad_ms"),
-        col("start.open_ad_skip_ms").as("open_ad_skip_ms"),
-        col("ts")): _*)))).otherwise(empty)
+    val arrays = branches.map { case (topic, b) =>
+      b.unnest match {
+        case None =>
+          when(b.guard, array(el(topic, struct(b.columns(None): _*))))
+            .otherwise(empty)
+        case Some(arr) =>
+          when(b.guard && col(arr).isNotNull, transform(col(arr),
+            e => el(topic, struct(b.columns(Some(e)): _*))))
+            .otherwise(empty)
+      }
+    }
     parsed
-      .select(explode(
-        concat(errArr, pageArr, dispArr, actArr, startArr)).as("tv"))
+      .select(explode(concat(arrays.toSeq: _*)).as("tv"))
       .select(col("tv.topic").as("topic"), col("tv.value").as("value"))
   }
 

@@ -33,13 +33,10 @@ object CdcPipeline {
     // the LWW tiebreaker — the reference's "last processed wins"
     // iteration order, `OdsBaseDbApp.scala:160-164`. Per-partition the
     // id is ascending in row order, matching Kafka per-partition order.
-    val parsed = batch
+    // Cdc.parse is a narrow projection, so the partitions and their row
+    // order (hence the ids) are those of the raw batch.
+    val parsed = Cdc.parse(batch)
       .withColumn("__seq", monotonically_increasing_id())
-      .select(
-        from_json(col("value").cast("string"),
-          graft.schemas.Gmall.maxwellEnvelopeSchema).as("j"),
-        col("__seq"))
-      .select(col("j.*"), col("__seq"))
     val normalized = Cdc.normalizeOps(parsed).persist()
     try {
       val facts = Cdc.withTopic(

@@ -26,12 +26,6 @@ import graft.ops.Demux
   */
 object LogPipeline {
 
-  val ErrorTopic   = "DWD_ERROR_LOG"
-  val PageTopic    = "DWD_PAGE_LOG"
-  val DisplayTopic = "DWD_PAGE_DISPLAY"
-  val ActionTopic  = "DWD_PAGE_ACTION"
-  val StartTopic   = "DWD_START_LOG"
-
   /** Kafka source (reference S1/S2: subscribe, group id, latest).
     * Offset resume is the checkpoint's job — no Redis equivalent
     * needed (SURVEY §2.1 S3).
@@ -55,28 +49,12 @@ object LogPipeline {
     * checkpoint, atomic-enough commit ordering).
     *
     * Uses the literally-one-pass form (`Demux.topicValues`: one parse
-    * + one Generate per record); the union-of-branches twin below
-    * re-parses per branch leg in a streaming plan (no persist there)
-    * and exists as the differential-test reference.
+    * + one Generate per record); a union of the per-branch frames
+    * would re-parse per branch leg in a streaming plan (no persist
+    * there).
     */
   def demuxToTopicValue(raw: DataFrame): DataFrame =
-    Demux.topicValues(Demux.parse(raw),
-      ErrorTopic, PageTopic, DisplayTopic, ActionTopic, StartTopic)
-
-  /** Union-of-branches form: same (topic, value) multiset as
-    * [[demuxToTopicValue]], built from the five independent branch
-    * projections + per-branch serialization.
-    */
-  def demuxToTopicValueUnion(raw: DataFrame): DataFrame = {
-    val parsed = Demux.parse(raw)
-    def tag(df: DataFrame, topic: String): DataFrame =
-      Demux.toJsonValue(df).select(lit(topic).as("topic"), col("value"))
-    tag(Demux.errors(parsed), ErrorTopic)
-      .unionByName(tag(Demux.pages(parsed), PageTopic))
-      .unionByName(tag(Demux.displays(parsed), DisplayTopic))
-      .unionByName(tag(Demux.actions(parsed), ActionTopic))
-      .unionByName(tag(Demux.starts(parsed), StartTopic))
-  }
+    Demux.topicValues(Demux.parse(raw))
 
   /** T1 equivalent (`transform` offset/metric capture without a second
     * stream traversal): `observe` attaches metrics to the single pass.

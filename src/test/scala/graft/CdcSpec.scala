@@ -18,10 +18,17 @@ class CdcSpec extends SparkSpec {
   ).toDF("value")
 
   test("op normalization: I/I/U and else-drop") {
-    val out = Cdc.normalizeOps(Cdc.parse(lines))
-      .select(col("data")("id").as("id"), col("op"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(out == Map("1" -> "I", "2" -> "I", "3" -> "U"))
+    def ops(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("data")("id").as("id"), col("op"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val plain = ops(Cdc.normalizeOps(Cdc.parse(lines)))
+    assert(plain == Map("1" -> "I", "2" -> "I", "3" -> "U"))
+    // the with-deletes table: delete -> D, truncate still dropped
+    val withDeletes = ops(Cdc.normalizeOpsWithDeletes(Cdc.parse(lines)))
+    assert(withDeletes ==
+      Map("1" -> "I", "2" -> "I", "3" -> "U", "4" -> "D"))
+    // the two agree on every non-delete row
+    assert(withDeletes.filter(_._2 != "D") == plain)
   }
 
   test("topic derivation: upper(table)_op") {

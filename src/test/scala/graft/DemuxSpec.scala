@@ -142,8 +142,18 @@ class DemuxSpec extends SparkSpec {
       df.as[(String, String)].collect().toSeq.sorted
     val onePass = multiset(
       graft.streaming.LogPipeline.demuxToTopicValue(lines))
-    val union = multiset(
-      graft.streaming.LogPipeline.demuxToTopicValueUnion(lines))
+    // the explode-based branch frames, serialized per branch: a
+    // differential check of topicValues' transform-based arrays
+    val parsed = Demux.parse(lines)
+    val union = multiset(Seq(
+      Demux.ErrorTopic -> Demux.errors(parsed),
+      Demux.PageTopic -> Demux.pages(parsed),
+      Demux.DisplayTopic -> Demux.displays(parsed),
+      Demux.ActionTopic -> Demux.actions(parsed),
+      Demux.StartTopic -> Demux.starts(parsed)
+    ).map { case (topic, branch) =>
+      Demux.toJsonValue(branch).select(lit(topic).as("topic"), col("value"))
+    }.reduce(_ unionByName _))
     assert(onePass.nonEmpty)
     assert(onePass == union)
   }

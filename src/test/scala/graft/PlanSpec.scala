@@ -348,4 +348,27 @@ class PlanSpec extends SparkSpec {
       p.contains("BroadcastNestedLoopJoin"),
       s"lut join did not broadcast:\n$p")
   }
+
+  test("one-pass log demux: one JSON parse, one Generate, no shuffle") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // a file source, so the parse cannot fold into a local relation
+    val dir = java.nio.file.Files.createTempDirectory("demux-plan")
+      .resolve("lines").toString
+    Seq("""{"common":{"mid":"m1"},"page":{"page_id":"p"},"ts":1}""")
+      .toDF("value").write.text(dir)
+    val df = streaming.LogPipeline.demuxToTopicValue(spark.read.text(dir))
+    val p = df.queryExecution.executedPlan
+    val h = new AdaptiveSparkPlanHelper {}
+    val parses = h.flatMap(p)(_.expressions.flatMap(
+      _.collect { case j: JsonToStructs => j }))
+    assert(parses.size == 1, s"expected one from_json:\n$p")
+    assert(h.collect(p) { case g: GenerateExec => g }.size == 1,
+      s"expected one Generate:\n$p")
+    assert(h.collect(p) { case e: Exchange => e }.isEmpty,
+      s"shuffle in the demux plan:\n$p")
+  }
 }

@@ -30,9 +30,9 @@ class StreamingSpec extends SparkSpec {
         .groupBy("topic").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(out == Map(
-        LogPipeline.ErrorTopic -> 1L,
-        LogPipeline.PageTopic  -> 1L,
-        LogPipeline.StartTopic -> 1L))
+        graft.ops.Demux.ErrorTopic -> 1L,
+        graft.ops.Demux.PageTopic  -> 1L,
+        graft.ops.Demux.StartTopic -> 1L))
     } finally q.stop()
   }
 
