@@ -18,8 +18,9 @@ import graft.ops.Demux
   *    one sink writes all 5 DWD topics; producer pooling/batching is
   *    the sink's job, reproducing the reference's per-partition flush
   *    amortization),
-  *  - one `foreachBatch` with `persist()` to demux 5 ways in a single
-  *    source pass (E1/E2 — mirrors the reference's single traversal).
+  *  - one parse + one Generate per record (`Demux.topicValues`, no
+  *    persist) to demux 5 ways in a single source pass (E1/E2 —
+  *    mirrors the reference's single traversal).
   *
   * The transform core is the SAME `Demux` functions the batch/oracle
   * path uses — streaming here is wiring, not logic.

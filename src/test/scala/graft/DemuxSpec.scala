@@ -135,17 +135,15 @@ class DemuxSpec extends SparkSpec {
     assert(p.mid != null && p.page_id != null)
   }
 
-  test("one-pass topicValues equals union-of-branches bit-for-bit") {
-    val lines = graft.ops.GmallSynth.logLinesFast(
-      Tables.events(spark, sf("sf0.001"))).select("value")
-    def multiset(df: org.apache.spark.sql.DataFrame) =
-      df.as[(String, String)].collect().toSeq.sorted
-    val onePass = multiset(
-      graft.streaming.LogPipeline.demuxToTopicValue(lines))
-    // the explode-based branch frames, serialized per branch: a
-    // differential check of topicValues' transform-based arrays
-    val parsed = Demux.parse(lines)
-    val union = multiset(Seq(
+  private def multiset(df: org.apache.spark.sql.DataFrame) =
+    df.as[(String, String)].collect().toSeq.sorted
+
+  /** The explode-based branch frames, serialized per branch and
+    * unioned as (topic, value): a differential check of
+    * topicValues' index Generate and CASE projection.
+    */
+  private def unionOfBranches(parsed: org.apache.spark.sql.DataFrame) =
+    Seq(
       Demux.ErrorTopic -> Demux.errors(parsed),
       Demux.PageTopic -> Demux.pages(parsed),
       Demux.DisplayTopic -> Demux.displays(parsed),
@@ -153,9 +151,79 @@ class DemuxSpec extends SparkSpec {
       Demux.StartTopic -> Demux.starts(parsed)
     ).map { case (topic, branch) =>
       Demux.toJsonValue(branch).select(lit(topic).as("topic"), col("value"))
-    }.reduce(_ unionByName _))
+    }.reduce(_ unionByName _)
+
+  /** Lines as a one-file text source, so the demux runs compiled
+    * over a single input partition (a local Seq would fold the parse
+    * into the optimizer).
+    */
+  private def textLines(lines: String*) = {
+    val dir = java.nio.file.Files.createTempDirectory("demux-edge")
+      .resolve("lines").toString
+    lines.toDF("value").coalesce(1).write.text(dir)
+    spark.read.text(dir)
+  }
+
+  test("one-pass topicValues equals union-of-branches bit-for-bit") {
+    val lines = graft.ops.GmallSynth.logLinesFast(
+      Tables.events(spark, sf("sf0.001"))).select("value")
+    val onePass = multiset(
+      graft.streaming.LogPipeline.demuxToTopicValue(lines))
+    val union = multiset(unionOfBranches(Demux.parse(lines)))
     assert(onePass.nonEmpty)
     assert(onePass == union)
+  }
+
+  test("one-pass topicValues on edge envelopes: null display, empty " +
+      "arrays, page-less displays, err short-circuit, bare envelope") {
+    val common = "\"common\":{\"mid\":\"m1\",\"uid\":\"7\"}"
+    val page = "\"page\":{\"page_id\":\"detail\",\"during_time\":5}"
+    val start = "\"start\":{\"entry\":\"icon\",\"loading_time\":9}"
+    val err = "\"err\":{\"error_code\":13,\"msg\":\"boom\"}"
+    val disps = "\"displays\":[{\"item\":\"4\",\"order\":\"1\"},null," +
+      "{\"item\":\"5\",\"order\":\"2\"}]"
+    val acts = "\"actions\":[{\"action_id\":\"cart_add\",\"ts\":6}]"
+    val noArrays = "\"displays\":[],\"actions\":[]"
+    def env(ts: Int, parts: String*) =
+      (common +: parts :+ s"\"ts\":$ts").mkString("{", ",", "}")
+    val lines = textLines(
+      env(1, page, disps),                          // null element
+      env(2, page, noArrays),                       // empty arrays
+      env(3, disps, acts),                          // no page: nothing
+      env(4, err, page, disps, acts),               // err only
+      env(5, err, start),                           // err only
+      env(6, page, start),                          // page + start
+      env(7))                                       // bare: nothing
+    val onePass = multiset(
+      graft.streaming.LogPipeline.demuxToTopicValue(lines))
+    assert(onePass == multiset(unionOfBranches(Demux.parse(lines))))
+    assert(onePass.groupBy(_._1).map { case (t, r) => t -> r.size } ==
+      Map(Demux.ErrorTopic -> 2, Demux.PageTopic -> 3,
+        Demux.DisplayTopic -> 3, Demux.StartTopic -> 1))
+    // the null display element still emits a record, with no element
+    // fields (to_json drops nulls)
+    assert(onePass.contains((Demux.DisplayTopic,
+      "{\"mid\":\"m1\",\"user_id\":\"7\",\"page_id\":\"detail\"," +
+        "\"during_time\":5,\"ts\":1}")))
+  }
+
+  test("one-pass topicValues emits err, page, displays, actions, " +
+      "start in order within an envelope") {
+    val common = "\"common\":{\"mid\":\"m1\"}"
+    def topicsOf(line: String) =
+      graft.streaming.LogPipeline.demuxToTopicValue(textLines(line))
+        .as[(String, String)].collect().toSeq
+    val full = topicsOf(s"""{$common,"page":{"page_id":"p"},""" +
+      """"displays":[{"item":"d1"},{"item":"d2"}],""" +
+      """"actions":[{"action_id":"a1"}],"start":{"entry":"e"},"ts":1}""")
+    assert(full.map(_._1) == Seq(Demux.PageTopic, Demux.DisplayTopic,
+      Demux.DisplayTopic, Demux.ActionTopic, Demux.StartTopic))
+    // displays keep their array order
+    assert(full(1)._2.contains("\"display_item\":\"d1\"") &&
+      full(2)._2.contains("\"display_item\":\"d2\""))
+    val errd = topicsOf(s"""{$common,"err":{"error_code":1},""" +
+      """"page":{"page_id":"p"},"start":{"entry":"e"},"ts":2}""")
+    assert(errd.map(_._1) == Seq(Demux.ErrorTopic))
   }
 
   test("quarantine routes malformed lines with a reason, keeps good ones out") {

@@ -352,7 +352,9 @@ class PlanSpec extends SparkSpec {
   test("one-pass log demux: one JSON parse, one Generate, no shuffle") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
-    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter,
+      SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
     // a file source, so the parse cannot fold into a local relation
@@ -370,5 +372,20 @@ class PlanSpec extends SparkSpec {
       s"expected one Generate:\n$p")
     assert(h.collect(p) { case e: Exchange => e }.isEmpty,
       s"shuffle in the demux plan:\n$p")
+    // the per-record work compiles: the Generate sits in a codegen
+    // stage (not below one of its InputAdapters), and the parse is
+    // the only interpreted expression (a lambda HOF such as
+    // transform would be another)
+    def stage(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
+      case _: InputAdapter => Nil
+      case _ => n.children.flatMap(stage)
+    })
+    assert(h.collect(p) { case w: WholeStageCodegenExec =>
+      stage(w.child).collect { case g: GenerateExec => g } }
+      .flatten.size == 1, s"Generate outside whole-stage codegen:\n$p")
+    val fallbacks = h.flatMap(p)(_.expressions.flatMap(_.collect {
+      case f: CodegenFallback if !f.isInstanceOf[JsonToStructs] => f }))
+    assert(fallbacks.isEmpty,
+      s"interpreted expressions ${fallbacks.map(_.prettyName)}:\n$p")
   }
 }

@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
     val q = LogPipeline
-      .demuxToTopicValue(in.toDF().withColumnRenamed("value", "value"))
+      .demuxToTopicValue(in.toDF())
       .writeStream.format("memory").queryName("demux_out")
       .outputMode("append").start()
     try {
