@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
+import graft.functions.ShapeToJson
 import graft.schemas.Gmall
 
 /** The rebuilt 5-way log demultiplexer (reference R1/T2-T9:
@@ -97,12 +99,9 @@ object Demux {
       unnest: Option[String] = None,
       elemFields: Seq[(String, String)] = Nil
   ) {
-    /** The record's columns, given the unnested element if any;
-      * `field` reads an envelope field path.
-      */
-    def columns(elem: Option[Column],
-        field: String => Column = col): Seq[Column] =
-      fields.map { case (f, name) => field(f).as(name) } ++
+    /** The record's columns, given the unnested element if any. */
+    def columns(elem: Option[Column]): Seq[Column] =
+      fields.map { case (f, name) => col(f).as(name) } ++
         elem.toSeq.flatMap(e => elemFields.map {
           case (f, name) => e.getField(f).as(name)
         }) :+ col("ts")
@@ -238,33 +237,31 @@ object Demux {
     * page, displays, actions, start). A projection below the
     * Generate computes, once per envelope, every branch's cumulative
     * end offset (1 for a taken scalar branch, the array size for a
-    * taken exploded one) and every envelope field a record reads; the
-    * Generate explodes the record index `i`; one projection above it
-    * picks, by a CASE on `i`, the topic and the branch's
-    * `to_json(struct(...))`, reading an exploded branch's element as
-    * `arr[i - start]`. Built from the same branch table as the
-    * per-branch frames, so values match `toJsonValue(branch)`
-    * bit-for-bit (differential spec asserts it).
+    * taken exploded one); the Generate explodes the record index `i`;
+    * one projection above it picks, by a CASE on `i`, the topic and
+    * the branch, and writes the branch's record with
+    * [[graft.functions.ShapeToJson]]: the envelope columns and each
+    * exploded branch's element `arr[i - start]` are read once, and the
+    * branch's record shape (from the branch table) names the field of
+    * each. Values match `toJsonValue(branch)` bit-for-bit
+    * (differential spec asserts it).
     *
     * No lambda HOF: `transform` builds an `ArrayTransform`, which is
     * `CodegenFallback` in Spark 4.1.2, so the earlier per-branch
     * `transform` arrays took the Generate and every display/action
     * record's struct + `to_json` out of whole-stage codegen. Here
     * everything above the parse compiles into one codegen stage (only
-    * `JsonToStructs` stays interpreted): `log_bulk` throughput 13.6k →
-    * 18.6k envelopes/s, p50 latency 2.74 → 1.95 s (medians of 10
-    * alternating pairs, 4 vCPU). Reading the envelope fields once
-    * below the Generate, instead of per record inside the CASE, also
-    * shrinks the code generated per micro-batch to about half, which
-    * is what small batches pay for.
+    * `JsonToStructs` stays interpreted): `log_bulk` throughput 13.3k →
+    * 17.8k envelopes/s, p50 latency 2.82 → 2.03 s, with `log_trickle`
+    * p50 unchanged (364 → 368 ms; medians of 5 and 10 alternating
+    * pairs, 4 vCPU). The records are not a CASE of
+    * `to_json(struct(...))` arms: see [[graft.functions.ShapeToJson]]
+    * for why.
     */
   def topicValues(parsed: DataFrame): DataFrame = {
     val bs = branches.toSeq
-    // below the Generate, once per envelope: every envelope field a
-    // record reads, and each branch's cumulative end offset
-    def flat(path: String) = "__" + path.replace('.', '_')
-    val fields = bs.flatMap(_._2.fields.map(_._1)).distinct
-      .map(p => col(p).as(flat(p)))
+    // below the Generate, once per envelope: each branch's cumulative
+    // end offset
     val counts = bs.map { case (_, b) =>
       b.unnest match {
         case None => when(b.guard, 1).otherwise(0)
@@ -278,24 +275,45 @@ object Demux {
     val i = col("__i")
     val total = col(endNames.last)
     val starts = lit(0) +: endNames.init.map(col)
-    val values = bs.zip(starts).map { case ((_, b), start) =>
-      val elem = b.unnest.map(arr => col(arr).getItem(i - start))
-      to_json(struct(b.columns(elem, p => col(flat(p))): _*))
-    }
     // CASE on the record index: the first branch whose end lies past it
     val conds = endNames.map(e => i < col(e))
     def pick(arms: Seq[Column]) =
       conds.zip(arms).tail.foldLeft(when(conds.head, arms.head)) {
         case (c, (cond, arm)) => c.when(cond, arm)
       }
+    // what the records read: the top-level envelope columns their
+    // field paths start with, then each exploded branch's element
+    // (`get` is null off the branch's index range)
+    val tops = (bs.flatMap(_._2.fields.map(_._1.split('.').head)) :+ "ts")
+      .distinct
+    val exploded = bs.indices.filter(k => bs(k)._2.unnest.isDefined)
+    val values = tops.map(col) ++ exploded.map(k =>
+      get(col(bs(k)._2.unnest.get), i - starts(k)))
+    // one record shape per branch, in `Branch.columns` order: the
+    // envelope fields, the element fields, `ts`
+    def envelope(name: String, path: String) = path.split('.') match {
+      case Array(c) => ShapeToJson.Field(name, tops.indexOf(c), None)
+      case Array(c, f) => ShapeToJson.Field(name, tops.indexOf(c), Some(f))
+    }
+    val shapes = bs.indices.map { k =>
+      val b = bs(k)._2
+      val elem = tops.size + exploded.indexOf(k)
+      b.fields.map { case (p, name) => envelope(name, p) } ++
+        b.elemFields.map { case (f, name) =>
+          ShapeToJson.Field(name, elem, Some(f)) } :+
+        envelope("ts", "ts")
+    }
+    val value = Bridge.column(ShapeToJson(
+      (pick(bs.indices.map(lit(_))) +: values).map(Bridge.expression),
+      shapes))
     parsed
-      .select(col("*") +: (fields ++ ends): _*)
+      .select(col("*") +: ends: _*)
       // sequence(0, -1) is [0, -1], so an envelope with no record
       // explodes a null instead
       .select(col("*"),
         explode(when(total > 0, sequence(lit(0), total - 1))).as("__i"))
       .select(pick(bs.map { case (topic, _) => lit(topic) }).as("topic"),
-        pick(values).as("value"))
+        value.as("value"))
   }
 
   /** DWS page-traffic rollup over the demuxed page stream — the

@@ -207,6 +207,30 @@ class DemuxSpec extends SparkSpec {
         "\"during_time\":5,\"ts\":1}")))
   }
 
+  test("one-pass topicValues writes the same records without " +
+      "whole-stage codegen and interpreted") {
+    // ShapeToJson has a codegen path inside a stage, one in a plain
+    // projection, and an interpreted one
+    val lines = textLines(pageJson, errJson,
+      """{"common":{"mid":"m2"},"start":{"entry":"icon"},"ts":3}""")
+    def run() = multiset(
+      graft.streaming.LogPipeline.demuxToTopicValue(lines))
+    val compiled = run()
+    assert(compiled.size == 6)
+    val keys = Seq("spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set(keys(0), "false")
+      assert(run() == compiled)
+      spark.conf.set(keys(1), "NO_CODEGEN")
+      assert(run() == compiled)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("one-pass topicValues emits err, page, displays, actions, " +
       "start in order within an envelope") {
     val common = "\"common\":{\"mid\":\"m1\"}"
