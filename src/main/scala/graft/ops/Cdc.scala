@@ -1,8 +1,13 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
 import graft.schemas.Gmall
 
 /** Rebuilt CDC (Maxwell-envelope) pipeline: reference
@@ -10,7 +15,12 @@ import graft.schemas.Gmall
   *
   * Pure DataFrame transforms shared by batch and streaming; the
   * reference's per-record if/else inside `foreachPartition` becomes
-  * filter/when/join, all narrow except the keyed LWW compaction.
+  * filter/when and an `isin` probe against the routing list, all
+  * narrow. Last-write-wins has two forms: [[lastWriteWinsInPartition]]
+  * (the reference's per-partition Redis `SET` order, no shuffle; the
+  * streaming pipeline's) and [[lastWriteWins]] (an explicit order
+  * column across partitions, one shuffle on the key; the batch
+  * queries').
   */
 object Cdc {
 
@@ -38,22 +48,22 @@ object Cdc {
       concat(upper(col("table")), lit("_"), col("op")))
 
   /** R2 (`OdsBaseDbApp.scala:89-99`): route rows whose table is in the
-    * (small, per-batch-reloadable) routing list — a broadcast LEFT
-    * SEMI join, the declarative form of the reference's
-    * broadcast-set `contains` probe. At scale: routing list is tiny →
-    * broadcast, stream side never shuffles.
+    * (small, per-batch-reloadable) routing list for `kind`. As in the
+    * reference, the list is read on the driver (here: when the frame
+    * is built, so once per streaming batch) and every row does one
+    * set probe, `table IN (names)`: a narrow filter, with no join and
+    * no broadcast exchange. A null `table`, a table missing from the
+    * list, or a `kind` with no tables routes nothing.
     */
   def routeMatching(
       df: DataFrame,
       routing: DataFrame,
       kind: String
-  ): DataFrame =
-    df.join(
-      broadcast(routing.filter(col("kind") === kind)
-        .select(col("table_name"))),
-      df("table") === col("table_name"),
-      "left_semi"
-    )
+  ): DataFrame = {
+    val names = routing.filter(col("kind") === kind)
+      .select(col("table_name")).collect().map(_.getString(0))
+    df.filter(col("table").isin(names.toSeq: _*))
+  }
 
   /** Op normalization INCLUDING deletes: Maxwell `delete` → D
     * tombstones (the reference's HBase path issues real deletes,
@@ -118,7 +128,8 @@ object Cdc {
   /** Keyed compaction honoring tombstones: newest row per key wins,
     * and if the newest is a delete the key disappears entirely —
     * the materialized-view semantics of a keyed store fed by CDC.
-    * [[lastWriteWins]] then a map-side tombstone filter.
+    * [[lastWriteWins]] (greatest `order` per key across partitions)
+    * then a map-side tombstone filter.
     */
   def compactWithTombstones(
       df: DataFrame,
@@ -147,10 +158,12 @@ object Cdc {
 
   /** R4 (`OdsBaseDbApp.scala:139-166`): keyed last-write-wins
     * compaction — the batch/shuffle form of the reference's Redis
-    * point upsert. One shuffle on the key, then a per-key window;
-    * with AQE skew handling this is the standard 100 TB-safe dedup.
-    * Kept over a `max_by` aggregate, which lost 7 of 10 paired
-    * `cdc_mixed` ingest runs on 4 vCPUs (median 7,797 vs 8,466 envelopes/s).
+    * point upsert. The rule: per key, the row with the greatest
+    * `order` wins, across all partitions. One shuffle on the key,
+    * then a per-key window; with AQE skew handling this is the
+    * standard 100 TB-safe dedup. Kept over a `max_by` aggregate,
+    * which lost 7 of 10 paired `cdc_mixed` ingest runs on 4 vCPUs
+    * (median 7,797 vs 8,466 envelopes/s).
     */
   def lastWriteWins(
       df: DataFrame,
@@ -161,6 +174,36 @@ object Cdc {
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
+  }
+
+  /** R4 as the reference runs it (`OdsBaseDbApp.scala:139-166`, a
+    * Redis `SET` per record in partition order). The rule: within each
+    * partition, the last row per key in the partition's row order
+    * wins. No shuffle and no order column: each partition keeps the
+    * last row it reads per key in a hash map keyed on a copy of the
+    * key, and emits those rows.
+    *
+    * A key whose rows sit in two partitions keeps one row per
+    * partition, so this is last-write-wins only when each key's
+    * writes stay in one partition (see `CdcPipeline`). The pass reads
+    * and returns catalyst rows, so every row keeps its bytes (a
+    * `Row`-encoder round trip would turn a map column into a Scala
+    * map and reorder its keys).
+    */
+  private[graft] def lastWriteWinsInPartition(
+      df: DataFrame,
+      keys: Seq[Column]
+  ): DataFrame = {
+    val keyExprs = df.select(keys: _*).queryExecution.analyzed
+      .asInstanceOf[Project].projectList
+    val input = df.queryExecution.analyzed.output
+    val rows = df.queryExecution.toRdd.mapPartitions { it =>
+      val key = UnsafeProjection.create(keyExprs, input)
+      val last = new java.util.LinkedHashMap[UnsafeRow, InternalRow]
+      it.foreach(r => last.put(key(r).copy(), r.copy()))
+      last.values.iterator.asScala
+    }
+    Bridge.internalCreateDataFrame(df.sparkSession, rows, df.schema)
   }
 
   /** SCD Type-2 history build from a change feed: where [[lastWriteWins]]
@@ -231,10 +274,11 @@ object Cdc {
     * sibling of [[maintainSumCount]] (that one maintains an
     * AGGREGATE; this one maintains the TABLE): apply a CDC delta
     * batch to a unique-keyed base snapshot, producing the post-delta
-    * snapshot. Within the batch the LAST op per key wins (`order` —
-    * CDC offsets/ids — must be unique per key, so U-then-D nets to
-    * absent and D-then-I nets to the re-inserted row); keys untouched
-    * by the delta pass through by anti-join.
+    * snapshot. Within the batch the LAST op per key wins, by
+    * [[lastWriteWins]] (greatest `order` per key across partitions;
+    * `order` — CDC offsets/ids — must be unique per key, so U-then-D
+    * nets to absent and D-then-I nets to the re-inserted row); keys
+    * untouched by the delta pass through by anti-join.
     *
     * `delta` carries the base's payload columns plus `op` and the
     * order column. Cost shape: one delta-keyed compaction + one

@@ -190,7 +190,8 @@ object CdcQueries {
           col("data")("id").cast("long").as("id")
         )
         .orderBy(col("id"))),
-    // R2+R3: fact fan-out — broadcast left-semi against routing list.
+    // R2+R3: fact fan-out — `table IN (routing list)`, the list read
+    // on the driver (the reference's broadcast-set probe).
     "q_cdc_fact_semi" -> ((s, d) =>
       Cdc.routeMatching(normalized(s, d), routing(s), "fact")
         .select(
@@ -200,7 +201,8 @@ object CdcQueries {
         )
         .orderBy(col("id"))),
     // R4: dim last-write-wins — latest row per uid among dim-routed
-    // rows (reference: Redis point upsert DIM:{TABLE}:{id}).
+    // rows (reference: Redis point upsert DIM:{TABLE}:{id}), by the
+    // window form: greatest id per uid across partitions.
     "q_cdc_dim_lww" -> ((s, d) => {
       val dims = Cdc.routeMatching(normalized(s, d), routing(s), "dim")
         .select(

@@ -14,13 +14,32 @@ import graft.ops.Cdc
   * reconfiguration without restart (SURVEY §7.5-1) — and the routed
   * writes happen inside the same batch, preserving the at-least-once
   * ordering (data before offsets).
+  *
+  * Dim last-write-wins follows the source's partition order: within a
+  * partition the last write per (table, id) wins, as the reference's
+  * Redis `SET`s in partition order do. (Parse, op normalization and
+  * routing are narrow, so a partition's rows keep the source
+  * partition's arrival order.) Keys whose writes all sit in
+  * one source partition, as Maxwell's `producer_partition_by=
+  * primary_key` or `database` keeps them, get exactly one row, the
+  * last write. A key whose writes span partitions gets one row per
+  * partition, in no defined order at the sink. A
+  * `monotonically_increasing_id` stamp plus a window would guarantee
+  * no more: the stamp orders by partition index first, so it keeps
+  * the write from the highest partition, not the latest one.
   */
 object CdcPipeline {
 
   /** One micro-batch of the CDC flow, factored out so batch tests and
     * the streaming query run the identical logic:
     * parse → normalize ops → fact rows to per-table/op topics,
-    * dim rows compacted last-write-wins by primary key.
+    * dim rows compacted last-write-wins by (table, id) per partition.
+    *
+    * Two narrow Spark jobs per batch, the fact sink's and the dim
+    * sink's: routing is an `isin` filter against the routing list read
+    * on the driver, and the compaction runs inside each partition, so
+    * neither has a broadcast exchange or a shuffle. The parsed batch
+    * is persisted so the second job reads it instead of parsing again.
     */
   def processBatch(
       batch: DataFrame,
@@ -28,27 +47,16 @@ object CdcPipeline {
       factSink: DataFrame => Unit,
       dimSink: DataFrame => Unit
   ): Unit = {
-    // Stamp arrival order `__seq` here, on the materialized batch
-    // (monotonically_increasing_id is not allowed on a streaming DF):
-    // the LWW tiebreaker — the reference's "last processed wins"
-    // iteration order, `OdsBaseDbApp.scala:160-164`. Per-partition the
-    // id is ascending in row order, matching Kafka per-partition order.
-    // Cdc.parse is a narrow projection, so the partitions and their row
-    // order (hence the ids) are those of the raw batch.
-    val parsed = Cdc.parse(batch)
-      .withColumn("__seq", monotonically_increasing_id())
-    val normalized = Cdc.normalizeOps(parsed).persist()
+    val normalized = Cdc.normalizeOps(Cdc.parse(batch)).persist()
     try {
       val facts = Cdc.withTopic(
         Cdc.routeMatching(normalized, routing, "fact"))
         .select(col("topic"),
           to_json(col("data")).as("value"))
       factSink(facts)
-      val dims = Cdc.lastWriteWins(
+      val dims = Cdc.lastWriteWinsInPartition(
         Cdc.routeMatching(normalized, routing, "dim"),
-        keys = Seq(col("table"), col("data")("id")),
-        order = Seq(col("__seq"))
-      )
+        keys = Seq(col("table"), col("data")("id")))
       dimSink(dims)
     } finally normalized.unpersist()
   }

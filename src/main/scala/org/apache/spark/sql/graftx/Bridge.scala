@@ -2,9 +2,11 @@ package org.apache.spark.sql.graftx
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** Column ↔ Expression bridge.
   *
@@ -18,6 +20,18 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over catalyst rows that already have `schema`'s
+    * layout, such as rows a `queryExecution.toRdd` pass hands back
+    * unchanged (`SparkSession.internalCreateDataFrame` is
+    * `private[sql]`).
+    */
+  def internalCreateDataFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: RDD[InternalRow],
+      schema: StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 
   /** The materialized RDD behind a checkpointed Dataset
     * (`ds.checkpoint`/`ds.localCheckpoint` both return a Dataset whose

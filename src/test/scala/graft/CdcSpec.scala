@@ -47,6 +47,78 @@ class CdcSpec extends SparkSpec {
       .select("table").as[String].collect().toSet == Set("user_info"))
   }
 
+  test("routing isin edge cases: kind with no tables, null table, " +
+      "duplicate routing rows, table missing from routing") {
+    val env = Seq(
+      """{"table":"order_info","type":"insert","data":{"id":"1"}}""",
+      """{"table":"order_info","type":"update","data":{"id":"1"}}""",
+      """{"type":"insert","data":{"id":"2"}}""",
+      """{"table":"other","type":"insert","data":{"id":"3"}}""",
+      """{"table":"user_info","type":"insert","data":{"id":"4"}}"""
+    ).toDF("value")
+    val n = Cdc.normalizeOps(Cdc.parse(env))
+    val routing = Seq(("order_info", "fact"), ("order_info", "fact"),
+      ("user_info", "dim")).toDF("table_name", "kind")
+    def routed(rt: org.apache.spark.sql.DataFrame, kind: String) =
+      Cdc.routeMatching(n, rt, kind)
+        .select(col("table"), col("data")("id"), col("op"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .sorted.toSeq
+    // empty `isin`: an unknown kind, and a routing table with no rows
+    assert(routed(routing, "audit").isEmpty)
+    assert(routed(routing.limit(0), "fact").isEmpty)
+    // the duplicated routing row does not duplicate the facts
+    assert(routed(routing, "fact") ==
+      Seq(("order_info", "1", "I"), ("order_info", "1", "U")))
+    // the null-table envelope (id 2) and the unrouted table (id 3)
+    // reach neither kind
+    assert(routed(routing, "dim") == Seq(("user_info", "4", "I")))
+  }
+
+  test("processBatch dim LWW follows partition order: the last write " +
+      "per key within a partition; a key spanning partitions keeps " +
+      "one row per partition") {
+    def env(table: String, tpe: String, id: String, v: String) =
+      s"""{"table":"$table","type":"$tpe","data":{"id":"$id","v":"$v"}}"""
+    // parallelize(rows, 2) slices the list into its two halves
+    val part0 = Seq(
+      env("user_info", "insert", "1", "c"),
+      env("user_info", "update", "1", "a"),
+      env("sku_info", "bootstrap-insert", "1", "x"),
+      env("user_info", "update", "1", "b"),
+      env("user_info", "insert", "3", "early"))
+    val part1 = Seq(
+      env("user_info", "insert", "2", "z"),
+      env("order_info", "insert", "9", "f"),
+      env("user_info", "update", "2", "y"),
+      env("user_info", "update", "3", "late"),
+      env("user_info", "update", "2", "w"))
+    val batch = spark.sparkContext.parallelize(part0 ++ part1, 2)
+      .toDF("value")
+    assert(batch.rdd.getNumPartitions == 2)
+    val routing = Seq(("order_info", "fact"), ("user_info", "dim"),
+      ("sku_info", "dim")).toDF("table_name", "kind")
+    var facts = Seq.empty[(String, String)]
+    var dims = Seq.empty[(String, String, String)]
+    graft.streaming.CdcPipeline.processBatch(batch, routing,
+      f => facts = f.collect().map(r => (r.getString(0), r.getString(1))).toSeq,
+      d => dims = d.select(col("table"), col("data")("id"),
+          to_json(col("data")))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .toSeq)
+    assert(facts == Seq(("ORDER_INFO_I", """{"id":"9","v":"f"}""")))
+    def written(key: (String, String)) =
+      dims.filter(d => (d._1, d._2) == key).map(_._3)
+    // one row per key, the partition's last write, bytes unchanged
+    assert(written(("user_info", "1")) == Seq("""{"id":"1","v":"b"}"""))
+    assert(written(("sku_info", "1")) == Seq("""{"id":"1","v":"x"}"""))
+    assert(written(("user_info", "2")) == Seq("""{"id":"2","v":"w"}"""))
+    // the stated limitation: writes in two partitions stay two rows
+    assert(written(("user_info", "3")).toSet ==
+      Set("""{"id":"3","v":"early"}""", """{"id":"3","v":"late"}"""))
+    assert(dims.size == 5)
+  }
+
   test("last-write-wins keeps exactly the newest row per key") {
     val df = Seq(
       ("k1", 1L, "a"), ("k1", 3L, "c"), ("k1", 2L, "b"),

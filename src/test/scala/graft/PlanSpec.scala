@@ -388,4 +388,54 @@ class PlanSpec extends SparkSpec {
     assert(fallbacks.isEmpty,
       s"interpreted expressions ${fallbacks.map(_.prettyName)}:\n$p")
   }
+
+  test("CDC micro-batch: the frames handed to the sinks have no " +
+      "broadcast, join, shuffle or window") {
+    import spark.implicits._
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // an RDD-backed batch, so the parse cannot fold into a local relation
+    val batch = spark.sparkContext.parallelize(Seq(
+      """{"table":"order_info","type":"insert","data":{"id":"1"}}""",
+      """{"table":"user_info","type":"insert","data":{"id":"7"}}""",
+      """{"table":"user_info","type":"update","data":{"id":"7"}}""",
+      """{"table":"other","type":"insert","data":{"id":"9"}}"""), 2)
+      .toDF("value")
+    val routing = Seq(("order_info", "fact"), ("user_info", "dim"))
+      .toDF("table_name", "kind")
+    var frames = Map.empty[String, org.apache.spark.sql.DataFrame]
+    def sink(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {
+      frames += name -> df
+      df.collect()
+    }
+    streaming.CdcPipeline.processBatch(batch, routing,
+      sink("fact"), sink("dim"))
+    assert(frames.keySet == Set("fact", "dim"))
+    val h = new AdaptiveSparkPlanHelper {}
+    def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap {
+        case s: ShuffleDependency[_, _, _] => Seq(s)
+        case d => shuffles(d.rdd)
+      }
+    frames.foreach { case (name, df) =>
+      val p = df.queryExecution.executedPlan
+      assert(h.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"$name: broadcast exchange:\n$p")
+      assert(h.collect(p) { case j: BaseJoinExec => j }.isEmpty,
+        s"$name: join:\n$p")
+      assert(h.collect(p) { case s: ShuffleExchangeExec => s }.isEmpty,
+        s"$name: shuffle:\n$p")
+      assert(h.collect(p) { case w: WindowExec => w }.isEmpty,
+        s"$name: window:\n$p")
+      // the dim frame is a scan over the compaction's RDD, so its
+      // lineage is checked too
+      assert(shuffles(df.queryExecution.toRdd).isEmpty,
+        s"$name: shuffle in the RDD lineage:\n${df.queryExecution.toRdd.toDebugString}")
+    }
+  }
 }
