@@ -59,11 +59,24 @@ object Cdc {
       df: DataFrame,
       routing: DataFrame,
       kind: String
-  ): DataFrame = {
-    val names = routing.filter(col("kind") === kind)
-      .select(col("table_name")).collect().map(_.getString(0))
-    df.filter(col("table").isin(names.toSeq: _*))
-  }
+  ): DataFrame = routeNames(df, routingNames(routing), kind)
+
+  /** The routing list read on the driver: table names per kind. A
+    * caller routing several kinds reads it once (each read is a Spark
+    * query).
+    */
+  private[graft] def routingNames(
+      routing: DataFrame): Map[String, Seq[String]] =
+    routing.select(col("kind"), col("table_name")).collect().toSeq
+      .groupMap(_.getString(0))(_.getString(1))
+
+  /** [[routeMatching]] against a routing list already read. */
+  private[graft] def routeNames(
+      df: DataFrame,
+      names: Map[String, Seq[String]],
+      kind: String
+  ): DataFrame =
+    df.filter(col("table").isin(names.getOrElse(kind, Nil): _*))
 
   /** Op normalization INCLUDING deletes: Maxwell `delete` → D
     * tombstones (the reference's HBase path issues real deletes,

@@ -36,10 +36,11 @@ object CdcPipeline {
     * dim rows compacted last-write-wins by (table, id) per partition.
     *
     * Two narrow Spark jobs per batch, the fact sink's and the dim
-    * sink's: routing is an `isin` filter against the routing list read
-    * on the driver, and the compaction runs inside each partition, so
-    * neither has a broadcast exchange or a shuffle. The parsed batch
-    * is persisted so the second job reads it instead of parsing again.
+    * sink's: routing is an `isin` filter against the routing list,
+    * read once per batch on the driver, and the compaction runs
+    * inside each partition, so neither has a broadcast exchange or a
+    * shuffle. The parsed batch is persisted so the second job reads
+    * it instead of parsing again.
     */
   def processBatch(
       batch: DataFrame,
@@ -47,15 +48,16 @@ object CdcPipeline {
       factSink: DataFrame => Unit,
       dimSink: DataFrame => Unit
   ): Unit = {
+    val names = Cdc.routingNames(routing)
     val normalized = Cdc.normalizeOps(Cdc.parse(batch)).persist()
     try {
       val facts = Cdc.withTopic(
-        Cdc.routeMatching(normalized, routing, "fact"))
+        Cdc.routeNames(normalized, names, "fact"))
         .select(col("topic"),
           to_json(col("data")).as("value"))
       factSink(facts)
       val dims = Cdc.lastWriteWinsInPartition(
-        Cdc.routeMatching(normalized, routing, "dim"),
+        Cdc.routeNames(normalized, names, "dim"),
         keys = Seq(col("table"), col("data")("id")))
       dimSink(dims)
     } finally normalized.unpersist()

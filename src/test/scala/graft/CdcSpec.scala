@@ -119,6 +119,20 @@ class CdcSpec extends SparkSpec {
     assert(dims.size == 5)
   }
 
+  test("processBatch reads the routing list once per batch") {
+    val reads = spark.sparkContext.longAccumulator("routing-rows")
+    val counted = udf { (k: String) => reads.add(1); k }.asNondeterministic()
+    val routing = Seq(("order_info", "fact"), ("user_info", "dim"))
+      .toDF("table_name", "kind")
+      .select(col("table_name"), counted(col("kind")).as("kind"))
+    var facts = 0L
+    var dims = 0L
+    graft.streaming.CdcPipeline.processBatch(lines, routing,
+      f => facts = f.count(), d => dims = d.count())
+    assert((facts, dims) == (2L, 1L))
+    assert(reads.value == 2L)
+  }
+
   test("last-write-wins keeps exactly the newest row per key") {
     val df = Seq(
       ("k1", 1L, "a"), ("k1", 3L, "c"), ("k1", 2L, "b"),
