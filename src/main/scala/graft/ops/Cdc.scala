@@ -174,9 +174,10 @@ object Cdc {
     * point upsert. The rule: per key, the row with the greatest
     * `order` wins, across all partitions. One shuffle on the key,
     * then a per-key window; with AQE skew handling this is the
-    * standard 100 TB-safe dedup. Kept over a `max_by` aggregate,
-    * which lost 7 of 10 paired `cdc_mixed` ingest runs on 4 vCPUs
-    * (median 7,797 vs 8,466 envelopes/s).
+    * standard 100 TB-safe dedup. Only batch code runs it
+    * (`q_cdc_dim_lww`, [[compactWithTombstones]], [[applySnapshot]]);
+    * the `max_by` aggregate it was kept over lost 7 of 10 `cdc_mixed`
+    * pairs while the streaming dim sink still ran this form.
     */
   def lastWriteWins(
       df: DataFrame,

@@ -26,7 +26,12 @@ import graft.schemas.Gmall
   */
 object Demux {
 
-  /** T2: raw Kafka-shaped `value: string` → typed envelope columns. */
+  /** T2: raw Kafka-shaped `value: string` → typed envelope columns. A
+    * filter on the parsed columns is pushed below `from_json` as one
+    * more schema-pruned parse per predicate unless the parse is
+    * materialized first; every branch's guard is one, so
+    * `DemuxQueries.parsed` and `CdcQueries.parsedEnv` persist it.
+    */
   def parse(raw: DataFrame): DataFrame =
     raw
       .select(from_json(col("value").cast("string"),

@@ -39,8 +39,9 @@ object CdcPipeline {
     * sink's: routing is an `isin` filter against the routing list,
     * read once per batch on the driver, and the compaction runs
     * inside each partition, so neither has a broadcast exchange or a
-    * shuffle. The parsed batch is persisted so the second job reads
-    * it instead of parsing again.
+    * shuffle. The parse, not the normalized frame, is persisted:
+    * Catalyst would push the op filter below `from_json` as a second,
+    * `type`-only parse. Both jobs read the one cached parse.
     */
   def processBatch(
       batch: DataFrame,
@@ -49,8 +50,9 @@ object CdcPipeline {
       dimSink: DataFrame => Unit
   ): Unit = {
     val names = Cdc.routingNames(routing)
-    val normalized = Cdc.normalizeOps(Cdc.parse(batch)).persist()
+    val parsed = Cdc.parse(batch).persist()
     try {
+      val normalized = Cdc.normalizeOps(parsed)
       val facts = Cdc.withTopic(
         Cdc.routeNames(normalized, names, "fact"))
         .select(col("topic"),
@@ -60,7 +62,7 @@ object CdcPipeline {
         Cdc.routeNames(normalized, names, "dim"),
         keys = Seq(col("table"), col("data")("id")))
       dimSink(dims)
-    } finally normalized.unpersist()
+    } finally parsed.unpersist()
   }
 
   /** Streaming entry: Kafka CDC topic → fact topics + dim upserts.

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.Demux
 
@@ -13,7 +12,8 @@ import graft.ops.Demux
   *  - `readStream.format("kafka")` + `Trigger.ProcessingTime("5
   *    seconds")` (S1/S2; micro-batch cadence),
   *  - checkpointLocation (S3/K3; offset resume + at-least-once commit
-  *    ordering — data sinks flush before the commit log advances),
+  *    ordering — data sinks flush before the commit log advances; T1
+  *    input counts are `StreamingQueryProgress.numInputRows`),
   *  - the built-in Kafka sink with a computed `topic` column (K1 —
   *    one sink writes all 5 DWD topics; producer pooling/batching is
   *    the sink's job, reproducing the reference's per-partition flush
@@ -56,19 +56,6 @@ object LogPipeline {
     */
   def demuxToTopicValue(raw: DataFrame): DataFrame =
     Demux.topicValues(Demux.parse(raw))
-
-  /** T1 equivalent (`transform` offset/metric capture without a second
-    * stream traversal): `observe` attaches metrics to the single pass.
-    * Batch callers read them from the returned Observation; streaming
-    * callers get them per micro-batch via
-    * `StreamingQueryProgress.observedMetrics` (same plan node).
-    */
-  def demuxWithMetrics(
-      raw: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("demux_in")
-    val observed = raw.observe(obs, count(lit(1)).as("n_in"))
-    (demuxToTopicValue(observed), obs)
-  }
 
   /** End-to-end: Kafka ODS topic → 5 DWD topics, 5 s micro-batches,
     * checkpointed. Runs the one-pass demux (one parse + one Generate

@@ -394,7 +394,10 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.ShuffleDependency
     import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
       ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -437,5 +440,14 @@ class PlanSpec extends SparkSpec {
       assert(shuffles(df.queryExecution.toRdd).isEmpty,
         s"$name: shuffle in the RDD lineage:\n${df.queryExecution.toRdd.toDebugString}")
     }
+    // one JSON parse per envelope: the op and routing filters sit
+    // above the cached parse, not pushed below it as a second parse
+    def parses(p: SparkPlan): Int = h.collect(p) {
+      case c: InMemoryTableScanExec => parses(c.relation.cachedPlan)
+      case n => n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    }.sum
+    val plans = frames.values.map(_.queryExecution.executedPlan)
+    assert(plans.map(parses).sum == 1,
+      s"expected one from_json across the sinks:\n${plans.mkString("\n")}")
   }
 }

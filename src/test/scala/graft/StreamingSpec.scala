@@ -157,17 +157,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("observe captures input metrics in the single demux pass (T1)") {
-    val raw = Seq(
-      """{"common":{"mid":"m1"},"page":{"page_id":"p"},"ts":1}""",
-      """{"common":{"mid":"m2"},"start":{"entry":"icon"},"ts":2}"""
-    ).toDF("value")
-    val (out, obs) = LogPipeline.demuxWithMetrics(raw)
-    val n = out.count()
-    assert(n == 2)   // one page row + one start row
-    assert(obs.get("n_in") == 2L)
-  }
-
   test("checkpoint restart resumes from committed offsets (S3/K3)") {
     // The reference stores offsets in Redis and resumes there
     // (MyOffsetUtils); Structured Streaming's checkpoint is the
@@ -199,6 +188,38 @@ class StreamingSpec extends SparkSpec {
     assert(total == 5, s"exactly-once across restart, saw $seen")
     // second run must not have reprocessed batch 0's rows
     assert(seen.count(_._2 == 3) == 1)
+  }
+
+  test("log demux restart resumes from the checkpoint: every record " +
+      "exactly once") {
+    val dir  = java.nio.file.Files.createTempDirectory("graft-log-src")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-log-ckpt")
+    val lines = graft.ops.GmallSynth
+      .logLines(Tables.events(spark, sf("sf0.001")))
+      .limit(120).as[String].collect().toSeq
+    val (a, b) = lines.splitAt(70)
+    def writeFile(name: String, ls: Seq[String]): Unit =
+      java.nio.file.Files.write(dir.resolve(name),
+        String.join("\n", ls: _*).getBytes)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def run(): Unit = {
+      val q = LogPipeline.demuxToTopicValue(spark.readStream.text(dir.toString))
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          seen ++= df.collect().map(r => (r.getString(0), r.getString(1))); ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    writeFile("a.json", a)
+    run()
+    writeFile("b.json", b)
+    run()   // restart from the checkpoint
+    val want = graft.ops.Demux.topicValues(graft.ops.Demux.parse(lines.toDF("value")))
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    assert(want.length > lines.length)   // displays/actions fan out
+    assert(seen.sorted == want.toSeq)
   }
 
   test("cdc restart after a dim-sink failure: facts delivered at " +
