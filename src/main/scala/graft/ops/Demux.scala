@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
-import graft.functions.ShapeToJson
+import graft.functions.{ReadJsonStruct, ShapeToJson}
 import graft.schemas.Gmall
 
 /** The rebuilt 5-way log demultiplexer (reference R1/T2-T9:
@@ -26,17 +26,23 @@ import graft.schemas.Gmall
   */
 object Demux {
 
-  /** T2: raw Kafka-shaped `value: string` → typed envelope columns. A
-    * filter on the parsed columns is pushed below `from_json` as one
-    * more schema-pruned parse per predicate unless the parse is
-    * materialized first; every branch's guard is one, so
-    * `DemuxQueries.parsed` and `CdcQueries.parsedEnv` persist it.
+  /** T2: raw Kafka-shaped `value: string` → typed envelope columns.
+    * The parse is `from_json(value, Gmall.logEnvelopeSchema)`, read by
+    * [[graft.functions.ReadJsonStruct]]: a fast path over the value's
+    * UTF-8 bytes for strict JSON, `from_json`'s own evaluator for any
+    * other input, so the rows are `from_json`'s. A filter on the parsed
+    * columns is pushed below the parse as one more parse per predicate
+    * unless the parse is materialized first; every branch's guard is
+    * one, so `DemuxQueries.parsed` and `CdcQueries.parsedEnv` persist
+    * it.
     */
   def parse(raw: DataFrame): DataFrame =
-    raw
-      .select(from_json(col("value").cast("string"),
-        Gmall.logEnvelopeSchema).as("j"))
+    raw.select(envelope(col("value").cast("string")).as("j"))
       .select(col("j.*"))
+
+  /** The log envelope parsed from JSON string `v`. */
+  private def envelope(v: Column): Column =
+    Bridge.column(ReadJsonStruct(Bridge.expression(v), Gmall.logEnvelopeSchema))
 
   /** Quarantine branch for records the envelope parse rejects: not
     * JSON at all, or JSON that lacks every envelope section. The
@@ -47,10 +53,9 @@ object Demux {
     */
   def quarantine(raw: DataFrame): DataFrame = {
     val v = col("value").cast("string")
-    val parsed = from_json(v, Gmall.logEnvelopeSchema)
     raw
-      .select(v.as("raw_value"), parsed.as("j"))
-      // PERMISSIVE from_json yields an all-null struct (not null) on
+      .select(v.as("raw_value"), envelope(v).as("j"))
+      // the PERMISSIVE parse yields an all-null struct (not null) on
       // bad input, so JSON validity needs its own probe
       .withColumn("reason",
         when(get_json_object(col("raw_value"), "$").isNull,
@@ -233,7 +238,7 @@ object Demux {
 
   /** ALL FIVE branches in literally one pass, the exact shape of the
     * reference's per-record if/else (`OdsBaseLogApp.scala:95-188`).
-    * The union-of-branches plan evaluates the `from_json` parse once
+    * The union-of-branches plan evaluates the envelope parse once
     * per BRANCH LEG (batch callers persist the envelope; a streaming
     * plan cannot), so this form is what the 5 s-micro-batch pipeline
     * runs: one parse + one Generate per record.
@@ -255,17 +260,25 @@ object Demux {
     * `CodegenFallback` in Spark 4.1.2, so the earlier per-branch
     * `transform` arrays took the Generate and every display/action
     * record's struct + `to_json` out of whole-stage codegen. Here
-    * everything above the parse compiles into one codegen stage (only
-    * `JsonToStructs` stays interpreted): `log_bulk` throughput 13.3k →
-    * 17.8k envelopes/s, p50 latency 2.82 → 2.03 s, with `log_trickle`
-    * p50 unchanged (364 → 368 ms; medians of 5 and 10 alternating
-    * pairs, 4 vCPU). The records are not a CASE of
+    * everything above the parse compiles into one codegen stage:
+    * `log_bulk` throughput 13.3k → 17.8k envelopes/s, p50 latency
+    * 2.82 → 2.03 s, with `log_trickle` p50 unchanged (364 → 368 ms;
+    * medians of 5 and 10 alternating pairs, 4 vCPU). The records are
+    * not a CASE of
     * `to_json(struct(...))` arms: see [[graft.functions.ShapeToJson]]
     * for why. Since `ShapeToJson` writes the records' UTF-8 bytes
     * itself rather than through Jackson, `log_bulk` reads 25.1k →
     * 31.0k envelopes/s and p50 1.45 → 1.17 s (medians of 10
     * alternating pairs, 4 vCPU; the writer's share of the demux task's
     * CPU samples fell from 41% to 24%), `log_trickle` p50 227 → 211 ms.
+    * Since the parse is [[graft.functions.ReadJsonStruct]] (a byte-level
+    * fast path, one call in the generated code) rather than the
+    * interpreted `JsonToStructs`, the parse joins that codegen stage
+    * and no expression of the demux is interpreted: `log_bulk` reads
+    * 27.2k → 39.7k envelopes/s and p50 1.32 → 0.87 s (medians of 10
+    * alternating pairs, 4 vCPU; the parse fell from 559 to 251 of the
+    * demux task's CPU samples, the task from 1309 to 863),
+    * `log_trickle` p50 237 → 229 ms.
     */
   def topicValues(parsed: DataFrame): DataFrame = {
     val bs = branches.toSeq

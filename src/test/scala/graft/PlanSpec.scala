@@ -353,6 +353,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import graft.functions.ReadJsonStruct
     import org.apache.spark.sql.execution.{GenerateExec, InputAdapter,
       SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -366,16 +367,18 @@ class PlanSpec extends SparkSpec {
     val p = df.queryExecution.executedPlan
     val h = new AdaptiveSparkPlanHelper {}
     val parses = h.flatMap(p)(_.expressions.flatMap(
-      _.collect { case j: JsonToStructs => j }))
-    assert(parses.size == 1, s"expected one from_json:\n$p")
+      _.collect { case j: ReadJsonStruct => j }))
+    assert(parses.size == 1, s"expected one envelope parse:\n$p")
+    assert(h.flatMap(p)(_.expressions.flatMap(
+      _.collect { case j: JsonToStructs => j })).isEmpty,
+      s"from_json in the demux plan:\n$p")
     assert(h.collect(p) { case g: GenerateExec => g }.size == 1,
       s"expected one Generate:\n$p")
     assert(h.collect(p) { case e: Exchange => e }.isEmpty,
       s"shuffle in the demux plan:\n$p")
     // the per-record work compiles: the Generate sits in a codegen
-    // stage (not below one of its InputAdapters), and the parse is
-    // the only interpreted expression (a lambda HOF such as
-    // transform would be another)
+    // stage (not below one of its InputAdapters), and no expression
+    // is interpreted (a lambda HOF such as transform would be)
     def stage(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
       case _: InputAdapter => Nil
       case _ => n.children.flatMap(stage)
@@ -384,7 +387,7 @@ class PlanSpec extends SparkSpec {
       stage(w.child).collect { case g: GenerateExec => g } }
       .flatten.size == 1, s"Generate outside whole-stage codegen:\n$p")
     val fallbacks = h.flatMap(p)(_.expressions.flatMap(_.collect {
-      case f: CodegenFallback if !f.isInstanceOf[JsonToStructs] => f }))
+      case f: CodegenFallback => f }))
     assert(fallbacks.isEmpty,
       s"interpreted expressions ${fallbacks.map(_.prettyName)}:\n$p")
   }
