@@ -493,15 +493,6 @@ object Cdc {
           .otherwise("update_conflict"))
   }
 
-  /** CDC sequence-gap detection — binlog/offset integrity from the
-    * id stream itself: per table, the observed ids split into
-    * consecutive-run islands (`id − row_number` constant-run key, the
-    * gaps-and-islands trick) and the profile reports how much of the
-    * [min, max] span is MISSING plus the largest single hole — the
-    * first question after any replication incident ("did we lose a
-    * range, or scattered rows?"). Per-table windows over the
-    * DISTINCT id set; islands are |gaps|-sized, never row-sized.
-    */
   /** Duplicate-delivery profile of a raw CDC feed — the
     * at-least-once reality check run BEFORE trusting any downstream
     * count: Kafka redelivers on rebalance/timeout, Maxwell replays
@@ -587,6 +578,15 @@ object Cdc {
       .orderBy(col("src_table"), col("col_name"))
   }
 
+  /** CDC sequence-gap detection — binlog/offset integrity from the
+    * id stream itself: per table, the observed ids split into
+    * consecutive-run islands (`id − row_number` constant-run key, the
+    * gaps-and-islands trick) and the profile reports how much of the
+    * [min, max] span is MISSING plus the largest single hole — the
+    * first question after any replication incident ("did we lose a
+    * range, or scattered rows?"). Per-table windows over the
+    * DISTINCT id set; islands are |gaps|-sized, never row-sized.
+    */
   def sequenceGaps(
       normalized: DataFrame,
       tableCol: String = "table",
@@ -676,6 +676,20 @@ object Cdc {
         expr("n_inversions * 1000000 div n_rows"))
   }
 
+  /** The repo's md5-60 ROW hash over named columns — shared by the
+    * batch [[checksumDiff]] and the streaming ChecksumMonitor's feed
+    * builders so both fingerprint the identical bytes. Each column
+    * coalesces to a chr(1)-prefixed sentinel BEFORE concat_ws
+    * (chr(1) cannot appear in sane data, so NULL gets its own hash
+    * byte-sequence distinct from every real value including '').
+    */
+  def rowHash60(hashCols: Seq[String]): Column = {
+    val nullSentinel = lit("\u0001NULL")
+    val hashInput = concat_ws("|",
+      hashCols.map(c => coalesce(col(c).cast("string"), nullSentinel)): _*)
+    conv(substring(md5(hashInput), 1, 15), 16, 10).cast("long")
+  }
+
   /** Replica checksum validation — "is the CDC-maintained copy still
     * byte-equal to the source" answered WITHOUT shipping rows: both
     * sides reduce to per-bucket (row count, 60-bit-row-hash sum)
@@ -711,20 +725,6 @@ object Cdc {
     * SUMS mod 2⁶¹−1, detectable-in-principle but 2⁻⁶⁰-grade; the op
     * is a drift MONITOR, not a cryptographic proof, and says so here.
     */
-  /** The repo's md5-60 ROW hash over named columns — shared by the
-    * batch [[checksumDiff]] and the streaming ChecksumMonitor's feed
-    * builders so both fingerprint the identical bytes. Each column
-    * coalesces to a chr(1)-prefixed sentinel BEFORE concat_ws
-    * (chr(1) cannot appear in sane data, so NULL gets its own hash
-    * byte-sequence distinct from every real value including '').
-    */
-  def rowHash60(hashCols: Seq[String]): Column = {
-    val nullSentinel = lit("\u0001NULL")
-    val hashInput = concat_ws("|",
-      hashCols.map(c => coalesce(col(c).cast("string"), nullSentinel)): _*)
-    conv(substring(md5(hashInput), 1, 15), 16, 10).cast("long")
-  }
-
   def checksumDiff(
       source: DataFrame,
       replica: DataFrame,

@@ -20,10 +20,11 @@ object CdcQueries {
   type Q = (SparkSession, String) => DataFrame
 
   /** events → raw Maxwell JSON lines (the synthetic ODS_BASE_DB).
-    * Built with codegen `concat` rather than `to_json`
-    * (StructsToJson is interpreted): every value here is a digit
-    * string or fixed literal, so no JSON escaping is needed, and the
-    * parse side (`from_json`) is what's actually under test.
+    * Built with `concat` rather than `to_json`, for the reason
+    * measured on [[GmallSynth.logLines]] (`to_json` writes the same
+    * lines, more slowly): every value here is a digit string or fixed
+    * literal, so no JSON escaping is needed, and the parse side
+    * (`from_json`) is what's actually under test.
     */
   def maxwellLines(events: DataFrame): DataFrame = {
     // coalesce-guard: concat null-propagates, so a null k would
@@ -64,11 +65,6 @@ object CdcQueries {
       .toDF("table_name", "kind")
   }
 
-  /** Parse + normalize once, route many ways — same single-pass shape
-    * (and the same persist-as-barrier rationale) as
-    * DemuxQueries.parsed: one shared materialized envelope per
-    * session instead of a per-branch single-split JSON round trip.
-    */
   /** Synthesized Maxwell-style CDC lines — harness scaffolding (a
     * real deployment reads these from a broker rather than deriving
     * them from parquet). Cached separately so `prewarm` can take the
@@ -85,7 +81,12 @@ object CdcQueries {
     synthLines(s, d).count(); ()
   }
 
-  /** Parsed (pre-normalization) envelope, cached once — both the
+  /** Parse + normalize once, route many ways — same single-pass shape
+    * (and the same persist-as-barrier rationale) as
+    * DemuxQueries.parsed: one shared materialized envelope per
+    * session instead of a per-branch single-split JSON round trip.
+    *
+    * Parsed (pre-normalization) envelope, cached once — both the
     * I/U-only and the tombstone-aware normalizations are cheap
     * map-side passes over it, so neither pays a second JSON parse.
     */
@@ -97,8 +98,6 @@ object CdcQueries {
     Cdc.normalizeOps(parsedEnv(s, d))
 
   val queries: Map[String, Q] = Map(
-    // T10+T11: normalize op types (click/error rows must be dropped),
-    // derive the dynamic topic column.
     // per-table op mix: the churn profile (rewrite share) of the
     // CDC feed — one conditional rollup, |tables| rows
     "q_cdc_op_mix" -> ((s, d) =>
@@ -181,6 +180,8 @@ object CdcQueries {
         Seq("c_custkey", "c_name", "c_mktsegment"), nBuckets = 32)
         .orderBy(col("bucket"))
     }),
+    // T10+T11: normalize op types (click/error rows must be dropped),
+    // derive the dynamic topic column.
     "q_cdc_route" -> ((s, d) =>
       Cdc.withTopic(normalized(s, d))
         .select(
@@ -229,9 +230,6 @@ object CdcQueries {
       Cdc.compactWithTombstones(dims, Seq(col("uid")), col("id"))
         .orderBy(col("uid"))
     }),
-    // SCD2: full versioned history of the same tombstone-aware dim
-    // feed — every I/U opens a version, the next change (or a delete)
-    // closes it; `valid_to IS NULL` marks the current version
     // keyed snapshot diff: planted adds/removes/changes recovered as
     // status counts (corpusDiff's relational sibling)
     "q_orders_diff" -> ((s, d) => {
@@ -325,6 +323,9 @@ object CdcQueries {
           inserts.unionByName(updates).unionByName(deletes))
         .orderBy(col("key"))
     }),
+    // SCD2: full versioned history of the same tombstone-aware dim
+    // feed — every I/U opens a version, the next change (or a delete)
+    // closes it; `valid_to IS NULL` marks the current version
     "q_cdc_scd2" -> ((s, d) => {
       val envD = Cdc.normalizeOpsWithDeletes(parsedEnv(s, d))
       val dims = Cdc.routeMatching(envD, routing(s), "dim")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
 import graft.functions.{ReadJsonStruct, ShapeToJson}
@@ -47,9 +47,10 @@ object Demux {
   /** Quarantine branch for records the envelope parse rejects: not
     * JSON at all, or JSON that lacks every envelope section. The
     * reference discards these inside its per-record try/catch
-    * (`OdsBaseLogApp.scala` fastjson parse); a pipeline at scale
-    * routes them to a dead-letter topic with a reason instead of
-    * dropping them silently. Map-side only.
+    * (`OdsBaseLogApp.scala` fastjson parse); this gives each a
+    * reason instead of dropping it silently. It is a batch function
+    * that no pipeline runs yet: `LogPipeline` drops these lines as the
+    * reference does, with no dead-letter topic. Map-side only.
     */
   def quarantine(raw: DataFrame): DataFrame = {
     val v = col("value").cast("string")
@@ -121,8 +122,10 @@ object Demux {
   private val onPage = !isErr && col("page").isNotNull
 
   /** The five branches, keyed by DWD topic in the reference's emit
-    * order; guards as in the object doc. The per-branch frames and the
-    * one-pass [[topicValues]] both read this table.
+    * order; guards as in the object doc. This table is the one
+    * definition of the DWD records (the reference's beans in `bean/`):
+    * the per-branch frames and the one-pass [[topicValues]] both read
+    * it.
     */
   private val branches = scala.collection.immutable.ListMap(
     // T3: error branch — whole record routed, nothing else extracted
@@ -130,7 +133,8 @@ object Demux {
       "common.mid" -> "mid",
       "err.error_code" -> "error_code",
       "err.msg" -> "msg")),
-    // T5: PageLog (16 cols, `bean/PageLog.scala:3-20`)
+    // T5: PageLog (16 cols, `bean/PageLog.scala:3-20`; its
+    // `sourceType` is `source_type` here)
     PageTopic -> Branch(onPage, commonCols ++ pageCols),
     // T6: PageDisplayLog (21 cols, `bean/PageDisplayLog.scala:3-26`)
     DisplayTopic -> Branch(onPage, commonCols ++ pageCols,
@@ -182,22 +186,6 @@ object Demux {
   def actions(parsed: DataFrame): DataFrame = branch(ActionTopic, parsed)
 
   def starts(parsed: DataFrame): DataFrame = branch(StartTopic, parsed)
-
-  // --- typed DWD surface (`Dataset[bean]`, the reference's
-  // `bean/*.scala` case classes) — same plans as the untyped branch
-  // functions, with compile-time field safety for downstream code ---
-
-  def pagesTyped(parsed: DataFrame): Dataset[Gmall.PageLog] =
-    pages(parsed).as(Encoders.product[Gmall.PageLog])
-
-  def startsTyped(parsed: DataFrame): Dataset[Gmall.StartLog] =
-    starts(parsed).as(Encoders.product[Gmall.StartLog])
-
-  def displaysTyped(parsed: DataFrame): Dataset[Gmall.PageDisplayLog] =
-    displays(parsed).as(Encoders.product[Gmall.PageDisplayLog])
-
-  def actionsTyped(parsed: DataFrame): Dataset[Gmall.PageActionLog] =
-    actions(parsed).as(Encoders.product[Gmall.PageActionLog])
 
   /** T9: serialize any branch back to a Kafka-ready JSON `value`. */
   def toJsonValue(branch: DataFrame): DataFrame =

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * The reference's demux input is gmall app-log JSON on Kafka
   * (FIXTURES.md §A1); the driver testdata has no such topic, so we
   * derive the JSON deterministically from `events.parquet` and run the
-  * REAL demux pipeline (to_json → Demux.parse → branch) over it. Every
+  * REAL demux pipeline (concat → Demux.parse → branch) over it. Every
   * derivation below is simple integer/modulo arithmetic so the DuckDB
   * oracle can compute the expected flat output directly from `events`
   * — the JSON round-trip itself is what's under test.
@@ -27,98 +27,19 @@ object GmallSynth {
 
   /** events(event_id, ts, user_id, event_type, value, props) →
     * single-column `value: string` of log-envelope JSON.
+    *
+    * Written with `concat`: every value is a digit string or fixed
+    * literal, so no JSON escaping is needed (the parse side is what
+    * the demux queries test). Not `to_json(struct(...))`, which wrote
+    * the same lines but more slowly: on sf0.1 (`local[4]`, 4 shuffle
+    * partitions, a noop sink, rounds 2-12 in one JVM, 4 vCPUs) it took
+    * a median of ~670 ms per round against ~560 ms here.
     */
   def logLines(events: DataFrame): DataFrame = {
     // The sf0.1 parquet is one file → one input split, which would
     // serialize the (expensive) JSON round-trip on a single core. A
     // Kafka source would arrive partitioned; reproduce that here with
     // one cheap hash shuffle into spark.sql.shuffle.partitions splits.
-    val e = events
-      .repartition(col("event_id"))
-      // coalesce-guard the derived fields: concat null-propagates, so a
-      // single null k/value would silently drop the whole record (the
-      // oracle's withK fragment applies the same defaults)
-      .withColumn("k",
-        coalesce(get_json_object(col("props"), "$.k").cast("int"), lit(0)))
-      .withColumn("value", coalesce(col("value"), lit(0.0)))
-      .withColumn("ems", unix_millis(col("ts")))
-
-    val common = struct(
-      s(col("user_id") % 34).as("ar"),
-      concat(lit("brand"), s(col("user_id") % 5)).as("ba"),
-      concat(lit("ch"), s(col("user_id") % 4)).as("ch"),
-      s(col("user_id") % 2).as("is_new"),
-      concat(lit("m"), s(col("user_id") % 7)).as("md"),
-      concat(lit("mid_"), s(col("user_id"))).as("mid"),
-      concat(lit("os"), s(col("user_id") % 3)).as("os"),
-      s(col("user_id")).as("uid"),
-      concat(lit("v"), s(col("user_id") % 9)).as("vc")
-    )
-
-    val page = struct(
-      floor(col("value") * 100).cast("long").as("during_time"),
-      s(col("event_id")).as("item"),
-      lit("sku_id").as("item_type"),
-      concat(lit("p"), s(col("k") % 7)).as("last_page_id"),
-      concat(lit("p"), s(col("k") % 10)).as("page_id"),
-      concat(lit("s"), s(col("k") % 3)).as("source_type")
-    )
-
-    val displays = transform(
-      sequence(lit(0), col("k") % 3),
-      i => struct(
-        lit("promo").as("display_type"),
-        s(col("event_id") * 10 + i).as("item"),
-        lit("sku_id").as("item_type"),
-        s(i).as("order"),
-        s(col("k") % 5).as("pos_id")
-      )
-    )
-
-    val actions = transform(
-      sequence(lit(0), col("k") % 2),
-      i => struct(
-        concat(lit("a"), s((col("k") + i) % 5)).as("action_id"),
-        s(col("event_id")).as("item"),
-        lit("sku_id").as("item_type"),
-        (col("ems") + i * 1000).as("ts")
-      )
-    )
-
-    val start = struct(
-      concat(lit("e"), s(col("k") % 3)).as("entry"),
-      (col("k") * 10).cast("long").as("loading_time"),
-      s(col("k") % 10).as("open_ad_id"),
-      (col("k") * 20).cast("long").as("open_ad_ms"),
-      ((col("k") % 2) * 100).cast("long").as("open_ad_skip_ms")
-    )
-
-    val err = struct(
-      col("k").cast("long").as("error_code"),
-      concat(lit("boom_"), s(col("k"))).as("msg")
-    )
-
-    e.select(
-      to_json(struct(
-        common.as("common"),
-        when(col("event_type")
-          .isin("view", "click", "purchase", "error"), page).as("page"),
-        when(col("event_type") === "click", displays).as("displays"),
-        when(col("event_type") === "purchase", actions).as("actions"),
-        when(col("event_type") === "signup", start).as("start"),
-        when(col("event_type") === "error", err).as("err"),
-        col("ems").as("ts")
-      )).as("value")
-    )
-  }
-
-  /** Same log lines built with codegen `concat` instead of the
-    * interpreted StructsToJson (every value is a digit string or
-    * fixed literal — no escaping needed; the parse side is what the
-    * demux queries test). Payload-identical to `logLines` modulo
-    * JSON key presence order, which `from_json` ignores.
-    */
-  def logLinesFast(events: DataFrame): DataFrame = {
     val e = events
       .repartition(col("event_id"))
       // coalesce-guard the derived fields: concat null-propagates, so a

@@ -2,20 +2,17 @@ package graft.schemas
 
 import org.apache.spark.sql.types._
 
-/** Explicit schemas for the reference's two Kafka envelopes and its
-  * four DWD output beans.
+/** Explicit schemas for the reference's two Kafka envelopes.
   *
   * The reference parses input JSON schemalessly with fastjson
   * (`app/OdsBaseLogApp.scala:57-64`) — missing keys become nulls. We
   * declare the envelope as an all-nullable `StructType` so `from_json`
   * reproduces exactly that leniency (SURVEY §1.3, §7.5-3).
   *
-  * Output case classes mirror the reference beans field-for-field:
-  * PageLog 16 cols (`bean/PageLog.scala:3-20`), StartLog 15
-  * (`bean/StartLog.scala:3-19`), PageDisplayLog 21
-  * (`bean/PageDisplayLog.scala:3-26`), PageActionLog 20
-  * (`bean/PageActionLog.scala:3-24`). `sourceType` is normalized to
-  * `source_type`; `Long` fields are `java.lang.Long` so JSON nulls
+  * The four DWD output records (the reference's beans in `bean/`) are
+  * not declared here: `graft.ops.Demux`'s branch table is their one
+  * definition, and its branch frames carry their names, order and
+  * types. Every field is a nullable STRING or BIGINT, so JSON nulls
   * survive (fastjson's nullable Long behavior).
   */
 object Gmall {
@@ -83,37 +80,4 @@ object Gmall {
     // Maxwell emits the PREVIOUS values of changed columns on updates
     StructField("old", MapType(StringType, StringType))
   ))
-
-  final case class PageLog(
-      mid: String, user_id: String, province_id: String, channel: String,
-      is_new: String, model: String, operate_system: String,
-      version_code: String, brand: String, page_id: String,
-      last_page_id: String, page_item: String, page_item_type: String,
-      during_time: java.lang.Long, source_type: String, ts: java.lang.Long)
-
-  final case class StartLog(
-      mid: String, user_id: String, province_id: String, channel: String,
-      is_new: String, model: String, operate_system: String,
-      version_code: String, brand: String, entry: String,
-      open_ad_id: String, loading_time_ms: java.lang.Long,
-      open_ad_ms: java.lang.Long, open_ad_skip_ms: java.lang.Long,
-      ts: java.lang.Long)
-
-  final case class PageDisplayLog(
-      mid: String, user_id: String, province_id: String, channel: String,
-      is_new: String, model: String, operate_system: String,
-      version_code: String, brand: String, page_id: String,
-      last_page_id: String, page_item: String, page_item_type: String,
-      during_time: java.lang.Long, source_type: String,
-      display_type: String, display_item: String, display_item_type: String,
-      display_order: String, display_pos_id: String, ts: java.lang.Long)
-
-  final case class PageActionLog(
-      mid: String, user_id: String, province_id: String, channel: String,
-      is_new: String, model: String, operate_system: String,
-      version_code: String, brand: String, page_id: String,
-      last_page_id: String, page_item: String, page_item_type: String,
-      during_time: java.lang.Long, source_type: String,
-      action_id: String, action_item: String, action_item_type: String,
-      action_ts: java.lang.Long, ts: java.lang.Long)
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.ops.{Demux, GmallSynth}
 
 /** Golden-row + partition-property tests for the log demux (R1/T2-T9).
@@ -36,6 +37,36 @@ class DemuxSpec extends SparkSpec {
       |"open_ad_ms":8000,"open_ad_skip_ms":0},"ts":2}"""
       .stripMargin.replaceAll("\n", "")
 
+  /** The DWD record contracts of the reference's beans in `bean/`
+    * (`sourceType` as `source_type`), and the error record: each
+    * branch frame's names, order and types. `topicValues` writes the
+    * same keys in the same order (the differential tests below).
+    */
+  private def record(fields: (String, DataType)*) =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+  private val commonFields = Seq("mid", "user_id", "province_id",
+    "channel", "is_new", "model", "operate_system", "version_code",
+    "brand").map(_ -> StringType)
+  private val pageFields = commonFields ++ Seq("page_id" -> StringType,
+    "last_page_id" -> StringType, "page_item" -> StringType,
+    "page_item_type" -> StringType, "during_time" -> LongType,
+    "source_type" -> StringType)
+  private val errorLog = record("mid" -> StringType,
+    "error_code" -> LongType, "msg" -> StringType, "ts" -> LongType)
+  private val pageLog = record(pageFields :+ ("ts" -> LongType): _*)
+  private val pageDisplayLog = record(pageFields ++ Seq(
+    "display_type" -> StringType, "display_item" -> StringType,
+    "display_item_type" -> StringType, "display_order" -> StringType,
+    "display_pos_id" -> StringType, "ts" -> LongType): _*)
+  private val pageActionLog = record(pageFields ++ Seq(
+    "action_id" -> StringType, "action_item" -> StringType,
+    "action_item_type" -> StringType, "action_ts" -> LongType,
+    "ts" -> LongType): _*)
+  private val startLog = record(commonFields ++ Seq(
+    "entry" -> StringType, "open_ad_id" -> StringType,
+    "loading_time_ms" -> LongType, "open_ad_ms" -> LongType,
+    "open_ad_skip_ms" -> LongType, "ts" -> LongType): _*)
+
   test("page branch projects 16 PageLog columns") {
     val rows = Demux.pages(parsedOf(pageJson)).collect()
     assert(rows.length == 1)
@@ -45,7 +76,8 @@ class DemuxSpec extends SparkSpec {
     assert(r.getAs[String]("page_id") == "detail")
     assert(r.getAs[Long]("during_time") == 1200L)
     assert(r.getAs[Long]("ts") == 1690000005000L)
-    assert(rows.head.length == 16)
+    assert(pageLog.length == 16)
+    assert(Demux.pages(parsedOf(pageJson)).schema == pageLog)
   }
 
   test("err short-circuits page/start even when present") {
@@ -56,6 +88,7 @@ class DemuxSpec extends SparkSpec {
     val err = Demux.errors(parsed).collect().head
     assert(err.getAs[Long]("error_code") == 13L)
     assert(err.getAs[String]("mid") == "mid_9")
+    assert(Demux.errors(parsed).schema == errorLog)
   }
 
   test("explode multiplicity: |displays| rows, parent fields repeated") {
@@ -64,7 +97,8 @@ class DemuxSpec extends SparkSpec {
     assert(d.map(_.getAs[String]("display_item")).sorted.toSeq ==
       Seq("4", "5"))
     assert(d.forall(_.getAs[String]("page_id") == "detail"))
-    assert(d.head.length == 21)
+    assert(pageDisplayLog.length == 21)
+    assert(Demux.displays(parsedOf(pageJson)).schema == pageDisplayLog)
   }
 
   test("action rows keep both action ts and record ts") {
@@ -72,14 +106,16 @@ class DemuxSpec extends SparkSpec {
     assert(a.length == 1)
     assert(a.head.getAs[Long]("action_ts") == 1690000006000L)
     assert(a.head.getAs[Long]("ts") == 1690000005000L)
-    assert(a.head.length == 20)
+    assert(pageActionLog.length == 20)
+    assert(Demux.actions(parsedOf(pageJson)).schema == pageActionLog)
   }
 
   test("start branch independent of page; 15 StartLog columns") {
     val s = Demux.starts(parsedOf(startJson)).collect()
     assert(s.length == 1)
     assert(s.head.getAs[Long]("loading_time_ms") == 1500L)
-    assert(s.head.length == 15)
+    assert(startLog.length == 15)
+    assert(Demux.starts(parsedOf(startJson)).schema == startLog)
   }
 
   test("missing keys parse to null (fastjson leniency)") {
@@ -105,34 +141,6 @@ class DemuxSpec extends SparkSpec {
       .agg(sum("n")).collect().head.getLong(0)
     assert(Demux.displays(parsed).count() == dispSum)
     parsed.unpersist()
-  }
-
-  test("logLinesFast parses to exactly the same envelopes as logLines") {
-    val events = Tables.events(spark, sf("sf0.001"))
-    def flat(lines: org.apache.spark.sql.DataFrame) =
-      Demux.parse(lines)
-        .select(to_json(struct(col("*"))).as("j"))
-        .as[String].collect().sorted.toSeq
-    val a = flat(GmallSynth.logLines(events))
-    val b = flat(GmallSynth.logLinesFast(events))
-    assert(a.length == b.length)
-    assert(a == b)
-  }
-
-  test("typed DWD datasets mirror the untyped branches") {
-    val parsed = Demux.parse(graft.ops.GmallSynth.logLinesFast(
-      Tables.events(spark, sf("sf0.001"))).select("value"))
-    assert(Demux.pagesTyped(parsed).count() ==
-      Demux.pages(parsed).count())
-    assert(Demux.startsTyped(parsed).count() ==
-      Demux.starts(parsed).count())
-    assert(Demux.displaysTyped(parsed).count() ==
-      Demux.displays(parsed).count())
-    assert(Demux.actionsTyped(parsed).count() ==
-      Demux.actions(parsed).count())
-    // compile-time field access on the typed rows
-    val p = Demux.pagesTyped(parsed).head()
-    assert(p.mid != null && p.page_id != null)
   }
 
   private def multiset(df: org.apache.spark.sql.DataFrame) =
@@ -165,7 +173,7 @@ class DemuxSpec extends SparkSpec {
   }
 
   test("one-pass topicValues equals union-of-branches bit-for-bit") {
-    val lines = graft.ops.GmallSynth.logLinesFast(
+    val lines = GmallSynth.logLines(
       Tables.events(spark, sf("sf0.001"))).select("value")
     val onePass = multiset(
       graft.streaming.LogPipeline.demuxToTopicValue(lines))
@@ -217,18 +225,8 @@ class DemuxSpec extends SparkSpec {
       graft.streaming.LogPipeline.demuxToTopicValue(lines))
     val compiled = run()
     assert(compiled.size == 6)
-    val keys = Seq("spark.sql.codegen.wholeStage",
-      "spark.sql.codegen.factoryMode")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(keys(0), "false")
-      assert(run() == compiled)
-      spark.conf.set(keys(1), "NO_CODEGEN")
-      assert(run() == compiled)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    for ((_, confs) <- codegenModes.tail)
+      assert(withConfs(confs: _*)(run()) == compiled)
   }
 
   test("one-pass topicValues emits err, page, displays, actions, " +

@@ -164,23 +164,6 @@ class ReadJsonStructSpec extends SparkSpec {
   private def readJson(c: Column): Column =
     Bridge.column(ReadJsonStruct(Bridge.expression(c), schema))
 
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private val modes = Seq(
-    "whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true"),
-    "no whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
-    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-
   /** Asserts `ReadJsonStruct` and `from_json` read every value alike,
     * byte for byte: the rows are compared as `UnsafeRow`s, since a
     * collected `Row` decodes strings and so hides invalid UTF-8. Each
@@ -228,7 +211,7 @@ class ReadJsonStructSpec extends SparkSpec {
   }
 
   private lazy val clean: Seq[Array[Byte]] =
-    GmallSynth.logLinesFast(Tables.events(spark, sf("sf0.001")))
+    GmallSynth.logLines(Tables.events(spark, sf("sf0.001")))
       .as[String].collect().toSeq.map(_.getBytes(UTF_8)) ++
       benchLike.map(_.getBytes(UTF_8))
 
@@ -250,7 +233,7 @@ class ReadJsonStructSpec extends SparkSpec {
     assert(missed.isEmpty, missed.take(3).map(new String(_, UTF_8)).mkString("\n"))
   }
 
-  for ((mode, confs) <- modes) {
+  for ((mode, confs) <- codegenModes) {
     test(s"ReadJsonStruct equals from_json row for row on the edge list: $mode") {
       withConfs(confs: _*)(assertSame(accepted ++ fallback, mode))
     }

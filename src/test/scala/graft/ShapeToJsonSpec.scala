@@ -86,24 +86,7 @@ class ShapeToJsonSpec extends SparkSpec {
         }: _*)))
     }
 
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private val modes = Seq(
-    "whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true"),
-    "no whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
-    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-
-  for (ignore <- Seq("true", "false"); (mode, confs) <- modes)
+  for (ignore <- Seq("true", "false"); (mode, confs) <- codegenModes)
     test(s"ShapeToJson equals to_json(struct(...)) byte for byte: " +
         s"$mode, ignoreNullFields=$ignore") {
       withConfs(confs :+

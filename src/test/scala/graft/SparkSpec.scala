@@ -7,6 +7,30 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Runs `body` with the session confs `confs` set, then restores
+    * each to its earlier value (or unsets it).
+    */
+  def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The three ways an expression runs, each with the confs that
+    * select it: inside a whole-stage codegen stage, in a generated
+    * projection of its own, and interpreted.
+    */
+  val codegenModes: Seq[(String, Seq[(String, String)])] = Seq(
+    "whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true"),
+    "no whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
 }
 
 object SparkSpec {

@@ -1,7 +1,10 @@
 #!/bin/bash
 # Dev-loop runner: launch a graft main class directly on the Spark
-# jars (skips sbt startup; compile first via `sbt compile`).
+# jars (skips sbt startup; compile first via `sbt compile`). Runs the
+# classes of the checkout this script lives in, so a copy of the repo
+# runs its own build.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 ADDOPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $ADDOPENS -Xmx${GRAFT_MEM:-8g} -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
