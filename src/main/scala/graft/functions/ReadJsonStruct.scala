@@ -6,7 +6,7 @@ import java.util.Locale
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow,
-  TimeZoneAwareExpression, UnaryExpression}
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -40,10 +40,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * floats or `true` in a field, numbers in string fields, raw control
   * characters, duplicate keys, trailing content, empty input — is read
   * by `from_json`'s own `JsonToStructsEvaluator`, with its default
-  * options and this expression's time zone. That fallback is what
-  * `from_json` runs, so its rows are `from_json`'s by construction;
-  * the fast path's rows are the ones Jackson gives for the inputs it
-  * accepts (`ReadJsonStructSpec` checks both against `from_json`).
+  * options and the session time zone (no field of a schema it admits
+  * reads one). That fallback is what `from_json` runs, so its rows
+  * are `from_json`'s by construction; the fast path's rows are the
+  * ones Jackson gives for the inputs it accepts (`ReadJsonStructSpec`
+  * checks both against `from_json`).
   *
   * Why: `from_json` decodes each value to chars with an
   * `InputStreamReader`, makes every string field a Java `String` and
@@ -59,16 +60,12 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[graft] case class ReadJsonStruct(
     child: Expression,
-    schema: StructType,
-    timeZoneId: Option[String] = None)
-    extends UnaryExpression with TimeZoneAwareExpression {
+    schema: StructType)
+    extends UnaryExpression {
 
   override def dataType: DataType = ReadJsonStruct.asNullable(schema)
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
-
-  override def withTimeZone(timeZoneId: String): ReadJsonStruct =
-    copy(timeZoneId = Some(timeZoneId))
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def bad(path: String, t: DataType): Option[String] = t match {
@@ -90,7 +87,8 @@ private[graft] case class ReadJsonStruct(
   @transient private lazy val reader = new ReadJsonStruct.Reader(schema)
 
   @transient private lazy val evaluator = JsonToStructsEvaluator(Map.empty,
-    dataType, SQLConf.get.columnNameOfCorruptRecord, timeZoneId,
+    dataType, SQLConf.get.columnNameOfCorruptRecord,
+    Some(SQLConf.get.sessionLocalTimeZone),
     SQLConf.get.getConf(SQLConf.VARIANT_ALLOW_DUPLICATE_KEYS))
 
   /** The fast path's row for `value`, or null if it does not accept

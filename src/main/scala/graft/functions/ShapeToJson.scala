@@ -3,21 +3,27 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode,
+  FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `to_json` of one of several record shapes, picked per row.
+/** An envelope's records as `array<struct<topic, value>>`: per shape
+  * whose guard holds, in shape order, its record as `to_json` writes it.
   *
-  * `children` is an int selector followed by the values the shapes
-  * read. The selector picks a shape; each field of a shape is one
-  * value, or one field of a struct value, and is a string or a bigint
+  * `children` is one boolean guard per shape, then the values the
+  * shapes read. A shape is a topic, the value it unnests if any, and
+  * its fields. A shape gives one record, or, if it unnests an array
+  * value, one record per element in array order (a null array gives
+  * none, a null element one without its element fields). Each field
+  * is one value, or one field of a struct value, or, for the value its
+  * shape unnests, one field of the element; it is a string or a bigint
   * (the DWD beans hold nothing else; analysis rejects other types).
-  * The bytes are those of
-  * `CASE selector WHEN k THEN to_json(struct(<shape k>)) END`:
+  * Each record's bytes are those of `to_json(struct(<its fields>))`:
   *  - a null field is left out, or written `"f":null` when
   *    `spark.sql.jsonGenerator.ignoreNullFields` is false;
   *  - strings are escaped as Jackson does: `\"`, `\\`, `\b \t \n \f
@@ -27,13 +33,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    it, decoded to a Java string (invalid bytes become U+FFFD) and
   *    encoded again.
   *
-  * Why not that CASE: whole-stage codegen generates the code of every
-  * field of every shape again in every streaming micro-batch, and for
-  * the log demux's five record shapes (74 fields) that doubled the
-  * per-batch planning and code generation of the small-batch pipeline.
-  * Here the generated code reads each value once and makes one call
-  * that assembles and writes the record, so it does not grow with the
-  * shapes.
+  * Why not `inline(array(when(guard, struct(topic, to_json(struct(
+  * ...))))...))`, with `transform` over the unnested arrays: `transform`
+  * is `CodegenFallback` and takes its operator out of whole-stage
+  * codegen, and whole-stage codegen generates the code of every field
+  * of every shape again in every streaming micro-batch; for the log
+  * demux's five record shapes (74 fields) a CASE of `to_json` arms
+  * doubled the per-batch planning and code generation of the
+  * small-batch pipeline. Here the generated code reads each value once
+  * and makes one call that walks the shapes and writes the records,
+  * so it does not grow with the shapes.
   *
   * Why not `to_json`'s own evaluator: in a warm profile of the demux
   * task on 20k `log_bulk` envelopes, writing the records through it
@@ -48,44 +57,58 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[graft] case class ShapeToJson(
     children: Seq[Expression],
-    shapes: Seq[Seq[ShapeToJson.Field]])
+    shapes: Seq[ShapeToJson.Shape])
     extends Expression {
   import ShapeToJson._
 
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
+  override def dataType: DataType = Records
+  override def nullable: Boolean = false
 
-  private def valueType(f: Field) = children(f.value + 1).dataType
+  private def valueType(v: Int) = children(shapes.size + v).dataType
 
-  /** The type of field `f`, if its struct field exists. */
-  private def fieldType(f: Field): Option[DataType] = f.field match {
-    case None => Some(valueType(f))
-    case Some(n) => valueType(f) match {
-      case s: StructType => s.find(_.name == n).map(_.dataType)
+  /** What field `f` of shape `s` reads from: its value, or the element
+    * of the value `s` unnests.
+    */
+  private def sourceType(s: Shape, f: Field) = valueType(f.value) match {
+    case ArrayType(e, _) if s.unnest.contains(f.value) => e
+    case t => t
+  }
+
+  /** The type of field `f` of shape `s`, if its struct field exists. */
+  private def fieldType(s: Shape, f: Field): Option[DataType] = f.field match {
+    case None => Some(sourceType(s, f))
+    case Some(n) => sourceType(s, f) match {
+      case st: StructType => st.find(_.name == n).map(_.dataType)
       case _ => None
     }
   }
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val bad = shapes.flatten.iterator.map(f => (f, fieldType(f))).collectFirst {
+    val bad = shapes.indices.iterator.collect {
+      case k if children(k).dataType != BooleanType => s"guard $k is not BOOLEAN"
+    } ++ shapes.iterator.flatMap(_.unnest).collect {
+      case v if !valueType(v).isInstanceOf[ArrayType] => s"value $v is not an array"
+    } ++ shapes.iterator.flatMap(s => s.fields.map(f => (f, fieldType(s, f)))).collect {
       case (f, None) => s"value ${f.value} has no struct field ${f.field.get}"
       case (f, Some(t)) if !t.isInstanceOf[StringType] && t != LongType =>
-        s"field ${f.name} is ${t.sql}; " +
-          "ShapeToJson writes only STRING and BIGINT fields"
+        s"field ${f.name} is ${t.sql}; ShapeToJson writes only STRING and BIGINT fields"
     }
-    if (children.head.dataType != IntegerType)
-      TypeCheckResult.TypeCheckFailure("selector must be int")
-    else bad.fold(TypeCheckResult.TypeCheckSuccess: TypeCheckResult)(
+    bad.nextOption().fold(TypeCheckResult.TypeCheckSuccess: TypeCheckResult)(
       TypeCheckResult.TypeCheckFailure(_))
   }
 
-  /** Per shape, per field: where to read it and its `"name":` bytes. */
-  @transient private lazy val layouts = shapes.map(_.map { f =>
-    val ordinal = f.field.fold(-1)(
-      valueType(f).asInstanceOf[StructType].fieldIndex(_))
-    Slot(f.value + 1, ordinal, fieldType(f).get == LongType,
-      nameBytes(f.name))
-  }.toArray)
+  /** Per shape: its topic, the array it unnests, and per field where
+    * to read it and its `"name":` bytes.
+    */
+  @transient private lazy val layouts = shapes.map { s =>
+    Layout(UTF8String.fromString(s.topic), s.unnest.fold(-1)(shapes.size + _),
+      s.unnest.map(valueType(_).asInstanceOf[ArrayType].elementType).orNull,
+      s.fields.map { f =>
+        Slot(if (s.unnest.contains(f.value)) -1 else shapes.size + f.value,
+          f.field.fold(-1)(sourceType(s, f).asInstanceOf[StructType].fieldIndex(_)),
+          fieldType(s, f).get == LongType, nameBytes(f.name))
+      }.toArray)
+  }.toArray
 
   @transient private lazy val ignoreNulls =
     SQLConf.get.jsonGeneratorIgnoreNullFields
@@ -158,20 +181,18 @@ private[graft] case class ShapeToJson(
     }
   }
 
-  /** The record of the shape `values(0)` picks; `values` holds the
-    * children's values in order.
+  /** The record of `slots`, reading `values` and the unnested
+    * element `elem`.
     */
-  def write(values: Array[Any]): UTF8String = {
-    if (values(0) == null) return null
-    val slots = layouts(values(0).asInstanceOf[Int])
-    if (buf == null) buf = new Array[Byte](256)
+  private def record(slots: Array[Slot], values: Array[Any],
+      elem: Any): UTF8String = {
     pos = 0
     put(Open)
     var first = true
     var j = 0
     while (j < slots.length) {
       val f = slots(j)
-      val x = values(f.value)
+      val x = if (f.value < 0) elem else values(f.value)
       val top = f.ordinal < 0
       val isNull = x == null ||
         (!top && x.asInstanceOf[InternalRow].isNullAt(f.ordinal))
@@ -193,8 +214,26 @@ private[graft] case class ShapeToJson(
     UTF8String.fromBytes(java.util.Arrays.copyOf(buf, pos))
   }
 
+  /** The records of the shapes whose guards hold; `values` holds the
+    * children's values in order.
+    */
+  def records(values: Array[Any]): ArrayData = {
+    if (buf == null) buf = new Array[Byte](256)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    for (k <- layouts.indices if values(k) == true) {
+      val l = layouts(k)
+      def emit(elem: Any): Unit =
+        out += InternalRow(l.topic, record(l.slots, values, elem))
+      if (l.unnest < 0) emit(null)
+      else if (values(l.unnest) != null)
+        values(l.unnest).asInstanceOf[ArrayData]
+          .foreach(l.elementType, (_, e) => emit(e))
+    }
+    new GenericArrayData(out.toArray)
+  }
+
   override def eval(input: InternalRow): Any =
-    write(children.map(_.eval(input)).toArray)
+    records(children.map(_.eval(input)).toArray)
 
   override protected def doGenCode(
       ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -208,8 +247,8 @@ private[graft] case class ShapeToJson(
     }
     ev.copy(code = code"""
       |${reads.mkString("\n")}
-      |UTF8String ${ev.value} = $self.write($values);
-      |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
+      |ArrayData ${ev.value} = $self.records($values);""".stripMargin,
+      isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(
@@ -219,15 +258,32 @@ private[graft] case class ShapeToJson(
 
 private[graft] object ShapeToJson {
 
+  /** A record shape: its topic, the value it unnests (an index into
+    * the values after the guards) if any, and its fields.
+    */
+  case class Shape(topic: String, unnest: Option[Int], fields: Seq[Field])
+
   /** A record field: its output name, the value it reads (an index
-    * into the values after the selector) and, for a struct value, the
-    * struct field.
+    * into the values after the guards) and, for a struct value or the
+    * element of the value its shape unnests, the struct field.
     */
   case class Field(name: String, value: Int, field: Option[String])
 
-  /** A resolved field: the index into `write`'s values, the struct
-    * ordinal (-1: the value itself), bigint or string, and the
-    * `"name":` bytes.
+  /** The result type: the records as (topic, value) pairs. */
+  private val Records = ArrayType(StructType(Seq(
+    StructField("topic", StringType), StructField("value", StringType))),
+    containsNull = false)
+
+  /** A resolved shape: the topic, the index of the array it unnests
+    * into `records`' values (-1: none) and its element type, and the
+    * fields.
+    */
+  private case class Layout(topic: UTF8String, unnest: Int,
+      elementType: DataType, slots: Array[Slot])
+
+  /** A resolved field: the index into `records`' values (-1: the
+    * unnested element), the struct ordinal (-1: the value itself),
+    * bigint or string, and the `"name":` bytes.
     */
   private case class Slot(value: Int, ordinal: Int, isLong: Boolean,
       name: Array[Byte])

@@ -24,7 +24,9 @@ import graft.schemas.Gmall
   */
 object Cdc {
 
-  /** Parse raw `value: string` Maxwell JSON into (table, type, data). */
+  /** Parse raw `value: string` Maxwell JSON into (table, type, data,
+    * old).
+    */
   def parse(raw: DataFrame): DataFrame =
     raw
       .select(from_json(col("value").cast("string"),

@@ -225,105 +225,44 @@ object Demux {
   }
 
   /** ALL FIVE branches in literally one pass, the exact shape of the
-    * reference's per-record if/else (`OdsBaseLogApp.scala:95-188`).
-    * The union-of-branches plan evaluates the envelope parse once
-    * per BRANCH LEG (batch callers persist the envelope; a streaming
-    * plan cannot), so this form is what the 5 s-micro-batch pipeline
-    * runs: one parse + one Generate per record.
+    * reference's per-record if/else (`OdsBaseLogApp.scala:95-188`):
+    * one parse and one Generate per envelope. For each branch whose
+    * guard holds, in emit order (err, page, displays, actions, start),
+    * [[graft.functions.ShapeToJson]] writes the branch's record, or
+    * one per element of the array it unnests, with the record shape
+    * the branch table gives; `inline` emits them as (topic, value).
+    * Values match `toJsonValue(branch)` bit-for-bit (differential spec
+    * asserts it).
     *
-    * Each envelope's records are numbered 0..n-1 in emit order (err,
-    * page, displays, actions, start). A projection below the
-    * Generate computes, once per envelope, every branch's cumulative
-    * end offset (1 for a taken scalar branch, the array size for a
-    * taken exploded one); the Generate explodes the record index `i`;
-    * one projection above it picks, by a CASE on `i`, the topic and
-    * the branch, and writes the branch's record with
-    * [[graft.functions.ShapeToJson]]: the envelope columns and each
-    * exploded branch's element `arr[i - start]` are read once, and the
-    * branch's record shape (from the branch table) names the field of
-    * each. Values match `toJsonValue(branch)` bit-for-bit
-    * (differential spec asserts it).
-    *
-    * No lambda HOF: `transform` builds an `ArrayTransform`, which is
-    * `CodegenFallback` in Spark 4.1.2, so the earlier per-branch
-    * `transform` arrays took the Generate and every display/action
-    * record's struct + `to_json` out of whole-stage codegen. Here
-    * everything above the parse compiles into one codegen stage:
-    * `log_bulk` throughput 13.3k → 17.8k envelopes/s, p50 latency
-    * 2.82 → 2.03 s, with `log_trickle` p50 unchanged (364 → 368 ms;
-    * medians of 5 and 10 alternating pairs, 4 vCPU). The records are
-    * not a CASE of
-    * `to_json(struct(...))` arms: see [[graft.functions.ShapeToJson]]
-    * for why. Since `ShapeToJson` writes the records' UTF-8 bytes
-    * itself rather than through Jackson, `log_bulk` reads 25.1k →
-    * 31.0k envelopes/s and p50 1.45 → 1.17 s (medians of 10
-    * alternating pairs, 4 vCPU; the writer's share of the demux task's
-    * CPU samples fell from 41% to 24%), `log_trickle` p50 227 → 211 ms.
-    * Since the parse is [[graft.functions.ReadJsonStruct]] (a byte-level
-    * fast path, one call in the generated code) rather than the
-    * interpreted `JsonToStructs`, the parse joins that codegen stage
-    * and no expression of the demux is interpreted: `log_bulk` reads
-    * 27.2k → 39.7k envelopes/s and p50 1.32 → 0.87 s (medians of 10
-    * alternating pairs, 4 vCPU; the parse fell from 559 to 251 of the
-    * demux task's CPU samples, the task from 1309 to 863),
-    * `log_trickle` p50 237 → 229 ms.
+    * Not a union of the branch frames: that plan evaluates the envelope
+    * parse once per branch leg, and while batch callers persist the
+    * envelope, a streaming plan cannot. No lambda HOF: `transform`
+    * builds an `ArrayTransform`, which is `CodegenFallback` in Spark
+    * 4.1.2 and would take the Generate and every record out of
+    * whole-stage codegen; here the parse, the walk and the Generate
+    * compile into one codegen stage.
     */
   def topicValues(parsed: DataFrame): DataFrame = {
     val bs = branches.toSeq
-    // below the Generate, once per envelope: each branch's cumulative
-    // end offset
-    val counts = bs.map { case (_, b) =>
-      b.unnest match {
-        case None => when(b.guard, 1).otherwise(0)
-        case Some(arr) =>
-          when(b.guard && col(arr).isNotNull, size(col(arr))).otherwise(0)
-      }
-    }
-    val endNames = bs.indices.map(k => s"__end$k")
-    val ends = counts.tail.scanLeft(counts.head)(_ + _)
-      .zip(endNames).map { case (e, n) => e.as(n) }
-    val i = col("__i")
-    val total = col(endNames.last)
-    val starts = lit(0) +: endNames.init.map(col)
-    // CASE on the record index: the first branch whose end lies past it
-    val conds = endNames.map(e => i < col(e))
-    def pick(arms: Seq[Column]) =
-      conds.zip(arms).tail.foldLeft(when(conds.head, arms.head)) {
-        case (c, (cond, arm)) => c.when(cond, arm)
-      }
     // what the records read: the top-level envelope columns their
-    // field paths start with, then each exploded branch's element
-    // (`get` is null off the branch's index range)
-    val tops = (bs.flatMap(_._2.fields.map(_._1.split('.').head)) :+ "ts")
-      .distinct
-    val exploded = bs.indices.filter(k => bs(k)._2.unnest.isDefined)
-    val values = tops.map(col) ++ exploded.map(k =>
-      get(col(bs(k)._2.unnest.get), i - starts(k)))
+    // field paths start with, and the arrays they unnest
+    val values = (bs.flatMap(_._2.fields.map(_._1.split('.').head)) ++
+      Seq("ts") ++ bs.flatMap(_._2.unnest)).distinct
+    // a field `c.f` of an unnested array `c` reads its element's `f`
+    def field(name: String, path: String) = path.split('.') match {
+      case Array(c, f @ _*) => ShapeToJson.Field(name, values.indexOf(c), f.headOption)
+    }
     // one record shape per branch, in `Branch.columns` order: the
     // envelope fields, the element fields, `ts`
-    def envelope(name: String, path: String) = path.split('.') match {
-      case Array(c) => ShapeToJson.Field(name, tops.indexOf(c), None)
-      case Array(c, f) => ShapeToJson.Field(name, tops.indexOf(c), Some(f))
+    val shapes = bs.map { case (topic, b) =>
+      ShapeToJson.Shape(topic, b.unnest.map(values.indexOf),
+        b.fields.map { case (p, n) => field(n, p) } ++
+          b.elemFields.map { case (f, n) => field(n, s"${b.unnest.get}.$f") } :+
+          field("ts", "ts"))
     }
-    val shapes = bs.indices.map { k =>
-      val b = bs(k)._2
-      val elem = tops.size + exploded.indexOf(k)
-      b.fields.map { case (p, name) => envelope(name, p) } ++
-        b.elemFields.map { case (f, name) =>
-          ShapeToJson.Field(name, elem, Some(f)) } :+
-        envelope("ts", "ts")
-    }
-    val value = Bridge.column(ShapeToJson(
-      (pick(bs.indices.map(lit(_))) +: values).map(Bridge.expression),
-      shapes))
-    parsed
-      .select(col("*") +: ends: _*)
-      // sequence(0, -1) is [0, -1], so an envelope with no record
-      // explodes a null instead
-      .select(col("*"),
-        explode(when(total > 0, sequence(lit(0), total - 1))).as("__i"))
-      .select(pick(bs.map { case (topic, _) => lit(topic) }).as("topic"),
-        value.as("value"))
+    parsed.select(inline(Bridge.column(ShapeToJson(
+      (bs.map(_._2.guard) ++ values.map(col)).map(Bridge.expression),
+      shapes))))
   }
 
   /** DWS page-traffic rollup over the demuxed page stream — the

@@ -143,12 +143,20 @@ class DemuxSpec extends SparkSpec {
     parsed.unpersist()
   }
 
+  // malformed and drifted envelopes: the parse's fallback path
+  private val notJson = "not json {{"
+  private val truncated = pageJson.take(pageJson.length / 2)
+  private val driftedDisplays =
+    pageJson.replaceFirst("\"displays\":\\[.*?\\],", "\"displays\":{},")
+  private val badDuringTime =
+    pageJson.replace("\"during_time\":1200", "\"during_time\":\"abc\"")
+
   private def multiset(df: org.apache.spark.sql.DataFrame) =
     df.as[(String, String)].collect().toSeq.sorted
 
   /** The explode-based branch frames, serialized per branch and
-    * unioned as (topic, value): a differential check of
-    * topicValues' index Generate and CASE projection.
+    * unioned as (topic, value): a differential check of topicValues'
+    * one walk over the branch table.
     */
   private def unionOfBranches(parsed: org.apache.spark.sql.DataFrame) =
     Seq(
@@ -201,13 +209,18 @@ class DemuxSpec extends SparkSpec {
       env(4, err, page, disps, acts),               // err only
       env(5, err, start),                           // err only
       env(6, page, start),                          // page + start
-      env(7))                                       // bare: nothing
+      env(7),                                       // bare: nothing
+      notJson, truncated,                           // nothing
+      env(8, page, "\"displays\":{}"),              // drifted array
+      env(9, "\"page\":{\"page_id\":\"p\",\"during_time\":\"abc\"}"))
     val onePass = multiset(
       graft.streaming.LogPipeline.demuxToTopicValue(lines))
     assert(onePass == multiset(unionOfBranches(Demux.parse(lines))))
     assert(onePass.groupBy(_._1).map { case (t, r) => t -> r.size } ==
-      Map(Demux.ErrorTopic -> 2, Demux.PageTopic -> 3,
+      Map(Demux.ErrorTopic -> 2, Demux.PageTopic -> 5,
         Demux.DisplayTopic -> 3, Demux.StartTopic -> 1))
+    assert(graft.streaming.LogPipeline.demuxToTopicValue(
+      textLines(notJson, truncated)).isEmpty)
     // the null display element still emits a record, with no element
     // fields (to_json drops nulls)
     assert(onePass.contains((Demux.DisplayTopic,
@@ -220,11 +233,13 @@ class DemuxSpec extends SparkSpec {
     // ShapeToJson has a codegen path inside a stage, one in a plain
     // projection, and an interpreted one
     val lines = textLines(pageJson, errJson,
-      """{"common":{"mid":"m2"},"start":{"entry":"icon"},"ts":3}""")
+      """{"common":{"mid":"m2"},"start":{"entry":"icon"},"ts":3}""",
+      notJson, truncated, driftedDisplays, badDuringTime)
     def run() = multiset(
       graft.streaming.LogPipeline.demuxToTopicValue(lines))
     val compiled = run()
-    assert(compiled.size == 6)
+    assert(compiled.size == 12)
+    assert(compiled == multiset(unionOfBranches(Demux.parse(lines))))
     for ((_, confs) <- codegenModes.tail)
       assert(withConfs(confs: _*)(run()) == compiled)
   }

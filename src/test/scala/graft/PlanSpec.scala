@@ -351,11 +351,12 @@ class PlanSpec extends SparkSpec {
 
   test("one-pass log demux: one JSON parse, one Generate, no shuffle") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, GetArrayItem,
+      Inline, JsonToStructs, Sequence}
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    import graft.functions.ReadJsonStruct
+    import graft.functions.{ReadJsonStruct, ShapeToJson}
     import org.apache.spark.sql.execution.{GenerateExec, InputAdapter,
-      SparkPlan, WholeStageCodegenExec}
+      ProjectExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
     // a file source, so the parse cannot fold into a local relation
@@ -372,8 +373,23 @@ class PlanSpec extends SparkSpec {
     assert(h.flatMap(p)(_.expressions.flatMap(
       _.collect { case j: JsonToStructs => j })).isEmpty,
       s"from_json in the demux plan:\n$p")
-    assert(h.collect(p) { case g: GenerateExec => g }.size == 1,
-      s"expected one Generate:\n$p")
+    val gens = h.collect(p) { case g: GenerateExec => g }
+    assert(gens.size == 1, s"expected one Generate:\n$p")
+    // the Generate inlines the records ShapeToJson walks out of each
+    // envelope, as (topic, value) with nothing projected above it, and
+    // no record index is left to number or decode
+    assert(gens.head.generator match {
+      case Inline(_: ShapeToJson) => true
+      case _ => false
+    }, s"expected inline(ShapeToJson):\n$p")
+    assert(gens.head.output.map(_.name) == Seq("topic", "value"),
+      s"Generate output ${gens.head.output}:\n$p")
+    assert(h.collect(p) { case pr: ProjectExec
+        if pr.exists(_.isInstanceOf[GenerateExec]) => pr }.isEmpty,
+      s"projection above the Generate:\n$p")
+    val indexing = h.flatMap(p)(_.expressions.flatMap(_.collect {
+      case e @ (_: Sequence | _: CaseWhen | _: GetArrayItem) => e.prettyName }))
+    assert(indexing.isEmpty, s"record-index expressions $indexing:\n$p")
     assert(h.collect(p) { case e: Exchange => e }.isEmpty,
       s"shuffle in the demux plan:\n$p")
     // the per-record work compiles: the Generate sits in a codegen
