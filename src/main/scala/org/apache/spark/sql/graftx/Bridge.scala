@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftx
 
+import java.util.concurrent.ThreadPoolExecutor
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -7,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.ThreadUtils
 
 /** Column ↔ Expression bridge.
   *
@@ -32,6 +34,13 @@ object Bridge {
       schema: StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** A pool of at most `maxThreads` daemon threads named
+    * `prefix-N`; idle threads exit after 60 s (Spark's
+    * `ThreadUtils.newDaemonCachedThreadPool`, `private[spark]`).
+    */
+  def daemonThreadPool(prefix: String, maxThreads: Int): ThreadPoolExecutor =
+    ThreadUtils.newDaemonCachedThreadPool(prefix, maxThreads)
 
   /** The materialized RDD behind a checkpointed Dataset
     * (`ds.checkpoint`/`ds.localCheckpoint` both return a Dataset whose

@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.ops.Cdc
 
 /** CDC normalization/routing/LWW semantics (T10/T11, R2/R4):
@@ -131,6 +133,129 @@ class CdcSpec extends SparkSpec {
       f => facts = f.count(), d => dims = d.count())
     assert((facts, dims) == (2L, 1L))
     assert(reads.value == 2L)
+  }
+
+  /** Ten envelopes, five routed fact and five routed dim, in two
+    * partitions, with the routing list for them.
+    */
+  private def twoPartitionBatch() = {
+    val envs = (1 to 5).flatMap(i => Seq(
+      s"""{"table":"order_info","type":"insert","data":{"id":"$i"}}""",
+      s"""{"table":"user_info","type":"update","data":{"id":"$i"}}"""))
+    val batch = spark.sparkContext.parallelize(envs, 2).toDF("value")
+    val routing = Seq(("order_info", "fact"), ("user_info", "dim"))
+      .toDF("table_name", "kind")
+    (batch, routing)
+  }
+
+  /** Whether `batch`'s parse is in the cache manager. */
+  private def parseCached(batch: org.apache.spark.sql.DataFrame) =
+    Cdc.parse(batch).storageLevel != StorageLevel.NONE
+
+  test("processBatch runs the sinks concurrently, the dim sink with " +
+      "the caller's thread-locals, and unpersists the parse after") {
+    val (batch, routing) = twoPartitionBatch()
+    // each sink releases its own latch and waits for the other's, so
+    // running them one after the other, in either order, times out
+    val factStarted, dimStarted = new CountDownLatch(1)
+    @volatile var factSawDim, dimSawFact = false
+    @volatile var dimSaw = ("", "", false)
+    @volatile var factRows = -1L
+    @volatile var dimRows = -1L
+    spark.sparkContext.setJobGroup("cdc-overlap", "processBatch")
+    try graft.streaming.CdcPipeline.processBatch(batch, routing,
+      f => {
+        factStarted.countDown()
+        factSawDim = dimStarted.await(30, TimeUnit.SECONDS)
+        factRows = f.count()
+      },
+      d => {
+        dimStarted.countDown()
+        dimSawFact = factStarted.await(30, TimeUnit.SECONDS)
+        dimSaw = (Thread.currentThread.getName,
+          spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
+          parseCached(batch))
+        dimRows = d.count()
+      })
+    finally spark.sparkContext.clearJobGroup()
+    assert(factSawDim && dimSawFact, "the sinks ran one after the other")
+    assert((factRows, dimRows) == ((5L, 5L)))
+    assert(dimSaw._1.startsWith("cdc-dim-sink-"), dimSaw)
+    assert(dimSaw._2 == "cdc-overlap", dimSaw)
+    assert(dimSaw._3, "the dim sink ran without the cached parse")
+    assert(!parseCached(batch), "the parse is still cached")
+  }
+
+  test("processBatch parses each envelope once with both sinks " +
+      "reading the cache concurrently") {
+    val (plain, routing) = twoPartitionBatch()
+    val parses = spark.sparkContext.longAccumulator("parsed-envelopes")
+    val counted = udf { (v: String) => parses.add(1); v }.asNondeterministic()
+    val batch = plain.select(counted(col("value")).as("value"))
+    assert(batch.rdd.getNumPartitions == 2)
+    // both jobs start together and reach the uncached partitions at once
+    val bothStarted = new CountDownLatch(2)
+    def together(df: org.apache.spark.sql.DataFrame): Unit = {
+      bothStarted.countDown()
+      assert(bothStarted.await(30, TimeUnit.SECONDS))
+      df.collect()
+    }
+    graft.streaming.CdcPipeline.processBatch(batch, routing,
+      together, together)
+    assert(parses.value == 10L)
+  }
+
+  test("processBatch when the fact sink throws: the dim sink " +
+      "completes over the cache, the fact sink's exception propagates " +
+      "as thrown, and the parse is unpersisted") {
+    val (batch, routing) = twoPartitionBatch()
+    val factFailed = new CountDownLatch(1)
+    @volatile var dimRows = -1L
+    @volatile var cachedAfterFactFailed = false
+    val boom = new IllegalStateException("fact topic down")
+    val thrown = intercept[IllegalStateException] {
+      graft.streaming.CdcPipeline.processBatch(batch, routing,
+        _ => { factFailed.countDown(); throw boom },
+        d => {
+          assert(factFailed.await(30, TimeUnit.SECONDS))
+          cachedAfterFactFailed = parseCached(batch)
+          dimRows = d.count()
+        })
+    }
+    assert(thrown eq boom)
+    assert(thrown.getSuppressed.isEmpty)
+    assert(dimRows == 5L, "processBatch returned before the dim sink finished")
+    assert(cachedAfterFactFailed, "unpersisted while the dim sink ran")
+    assert(!parseCached(batch), "the parse is still cached")
+  }
+
+  test("processBatch when the dim sink throws: the fact sink " +
+      "completes, the dim sink's exception propagates as thrown; when " +
+      "both throw, the fact sink's carries the dim sink's as suppressed") {
+    val (batch, routing) = twoPartitionBatch()
+    val dimFailed = new CountDownLatch(1)
+    @volatile var factRows = -1L
+    val dimBoom = new IllegalStateException("dim store down")
+    val thrown = intercept[IllegalStateException] {
+      graft.streaming.CdcPipeline.processBatch(batch, routing,
+        f => {
+          assert(dimFailed.await(30, TimeUnit.SECONDS))
+          factRows = f.count()
+        },
+        _ => { dimFailed.countDown(); throw dimBoom })
+    }
+    assert(thrown eq dimBoom)
+    assert(factRows == 5L, "processBatch returned before the fact sink finished")
+    assert(!parseCached(batch), "the parse is still cached")
+
+    val factBoom = new IllegalArgumentException("fact topic down")
+    val both = intercept[IllegalArgumentException] {
+      graft.streaming.CdcPipeline.processBatch(batch, routing,
+        _ => throw factBoom, _ => throw dimBoom)
+    }
+    assert(both eq factBoom)
+    assert(both.getSuppressed.toSeq == Seq(dimBoom))
+    assert(!parseCached(batch), "the parse is still cached")
   }
 
   test("last-write-wins keeps exactly the newest row per key") {

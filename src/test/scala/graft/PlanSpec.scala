@@ -430,7 +430,9 @@ class PlanSpec extends SparkSpec {
       .toDF("value")
     val routing = Seq(("order_info", "fact"), ("user_info", "dim"))
       .toDF("table_name", "kind")
-    var frames = Map.empty[String, org.apache.spark.sql.DataFrame]
+    // the sinks run on two threads
+    val frames = scala.collection.concurrent.TrieMap
+      .empty[String, org.apache.spark.sql.DataFrame]
     def sink(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {
       frames += name -> df
       df.collect()
