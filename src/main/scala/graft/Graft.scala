@@ -410,7 +410,7 @@ object Graft {
       ops.Text.incrementalNearDupSigs(docs, seenSigs, threshold)
     /** The per-doc artifact [[nearDupsAgainstSigs]] joins: MinHash
       * signature + hashed shingles — what an ingestion pipeline
-      * persists per admitted doc (see streaming.IngestPipeline).
+      * persists per admitted doc.
       */
     def nearDupSignatures: DataFrame = ops.Text.nearDupSignatures(docs)
     /** Distinct md5 content hashes — [[dedupAgainstHashes]]' stored
@@ -918,7 +918,6 @@ object Graft {
     // incremental semantic ingestion gate: store
     // (vec_id, list_id, unit) artifacts once at ingestion, gate each
     // batch against them within its coarse list
-    // (streaming/SemanticIngestPipeline is the foreachBatch form)
     def semanticSignaturesAssigned: DataFrame =
       ops.Vector.semanticSignaturesAssigned(embs)
     def semanticSignatures(model: KMeansModel): DataFrame =

@@ -54,8 +54,12 @@ object Cdc {
     * reference, the list is read on the driver (here: when the frame
     * is built, so once per streaming batch) and every row does one
     * set probe, `table IN (names)`: a narrow filter, with no join and
-    * no broadcast exchange. A null `table`, a table missing from the
-    * list, or a `kind` with no tables routes nothing.
+    * no broadcast exchange. A null `table` (an envelope that is not
+    * JSON), a table missing from the list, a `kind` with no tables, or
+    * a null `data` (no `data`, or one that is not an object) routes
+    * nothing. A null `data` would reach the fact sink as a null value,
+    * a Kafka tombstone, and the dim sink with a null id. Nothing
+    * counts these drops yet.
     */
   def routeMatching(
       df: DataFrame,
@@ -78,7 +82,8 @@ object Cdc {
       names: Map[String, Seq[String]],
       kind: String
   ): DataFrame =
-    df.filter(col("table").isin(names.getOrElse(kind, Nil): _*))
+    df.filter(col("table").isin(names.getOrElse(kind, Nil): _*) &&
+      col("data").isNotNull)
 
   /** Op normalization INCLUDING deletes: Maxwell `delete` → D
     * tombstones (the reference's HBase path issues real deletes,
@@ -499,8 +504,9 @@ object Cdc {
     * at-least-once reality check run BEFORE trusting any downstream
     * count: Kafka redelivers on rebalance/timeout, Maxwell replays
     * on restart, and every duplicate line double-applies in a
-    * consumer without idempotent sinks ([[IdempotentSink]] is the
-    * fix this op sizes). Per table over the raw `value` lines:
+    * consumer whose sink is not idempotent (this op sizes how much
+    * such a sink would have to absorb). Per table over the raw
+    * `value` lines:
     * messages, distinct lines, duplicate count/ppm, and the worst
     * single line's copy count (`max_copies` — 2 means occasional
     * redelivery, 10+ means a replay loop).
@@ -678,9 +684,8 @@ object Cdc {
         expr("n_inversions * 1000000 div n_rows"))
   }
 
-  /** The repo's md5-60 ROW hash over named columns — shared by the
-    * batch [[checksumDiff]] and the streaming ChecksumMonitor's feed
-    * builders so both fingerprint the identical bytes. Each column
+  /** The repo's md5-60 ROW hash over named columns, the per-row
+    * term of [[checksumDiff]]'s bucket fingerprints. Each column
     * coalesces to a chr(1)-prefixed sentinel BEFORE concat_ws
     * (chr(1) cannot appear in sane data, so NULL gets its own hash
     * byte-sequence distinct from every real value including '').

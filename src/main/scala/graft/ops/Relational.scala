@@ -677,6 +677,41 @@ object Relational {
       .orderBy(col("event_id"))
   }
 
+  /** Stream-stream event-time interval join: attribute each action
+    * (e.g. click) to the view by the same user that happened at most
+    * `maxDelay` before it. BOTH sides carry a watermark and the join
+    * condition bounds event-time distance — that pair of constraints
+    * is what lets the state store evict rows once the watermark
+    * passes `ts + maxDelay`, keeping state size proportional to the
+    * delay horizon instead of the stream's history. Without the time
+    * bound a stream-stream join must buffer forever.
+    *
+    * Works identically on batch frames (watermarks are no-ops there),
+    * which is how its batch twin `q_interval_join` exercises the same
+    * join shape against the oracle.
+    */
+  def intervalJoin(
+      views: DataFrame,
+      actions: DataFrame,
+      maxDelay: String = "10 minutes",
+      watermark: String = "10 minutes"
+  ): DataFrame = {
+    val v = views
+      .withWatermark("ts", watermark)
+      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
+        col("ts").as("view_ts"))
+    val a = actions
+      .withWatermark("ts", watermark)
+      .select(col("user_id").as("a_user"), col("event_id").as("action_id"),
+        col("ts").as("action_ts"))
+    v.join(a,
+      col("v_user") === col("a_user") &&
+        col("action_ts") >= col("view_ts") &&
+        col("action_ts") <= col("view_ts") + expr(s"INTERVAL $maxDelay"))
+      .select(col("v_user").as("user_id"), col("view_id"),
+        col("action_id"), col("view_ts"), col("action_ts"))
+  }
+
   /** Last-touch conversion attribution: for every conversion event,
     * the most recent qualifying touch by the SAME user within
     * `windowMs` — the event-time credit assignment every

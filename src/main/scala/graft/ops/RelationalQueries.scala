@@ -460,7 +460,7 @@ object RelationalQueries {
     // watermarks no-op on batch frames): click→view attribution
     "q_interval_join" -> ((s, d) => {
       val e = Tables.events(s, d)
-      graft.streaming.EventTimeOps.intervalJoin(
+      intervalJoin(
         e.filter(col("event_type") === "view"),
         e.filter(col("event_type") === "click"),
         maxDelay = "10 minutes", watermark = "10 minutes")

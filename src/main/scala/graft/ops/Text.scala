@@ -1986,9 +1986,8 @@ object Text {
     * min-aggregate on position, one join back on position, one
     * per-doc rollup — all narrow hash-keyed exchanges.
     */
-  /** The `(doc_id, pos)` Bloom position rows shared by the batch
-    * FPR replay and the streaming gate — k md5 draws per doc, mod
-    * the bit width. */
+  /** The `(doc_id, pos)` Bloom position rows of the batch FPR
+    * replay — k md5 draws per doc, mod the bit width. */
   private[graft] def bloomPositions(
       docs: DataFrame,
       mBits: Int,

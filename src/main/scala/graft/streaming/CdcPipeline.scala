@@ -44,11 +44,13 @@ object CdcPipeline {
     * Each sink runs one narrow Spark job: routing is an `isin`
     * filter against the routing list, read once per batch on the
     * driver, and the compaction runs inside each partition, so
-    * neither has a broadcast exchange or a shuffle. The parse, not the normalized frame, is persisted:
-    * Catalyst would push the op filter below `from_json` as a second,
-    * `type`-only parse. Both jobs read the one cached parse, and the
-    * block manager's lock computes each cached partition once even
-    * when both jobs reach it at the same time.
+    * neither has a broadcast exchange or a shuffle. The parse, not
+    * the normalized frame, is persisted: Catalyst would push the op
+    * filter below `from_json` as a second, `type`-only parse. Both
+    * jobs read the one cached parse, and the block manager's lock
+    * computes each cached partition once even when both jobs reach
+    * it at the same time. An envelope whose `data` did not parse
+    * reaches neither sink ([[Cdc.routeMatching]]).
     *
     * The sink contract:
     *  - the dim sink runs on a second driver thread while the fact

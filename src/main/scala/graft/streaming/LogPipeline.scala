@@ -62,6 +62,16 @@ object LogPipeline {
     * per record); the single query keeps offset commit ordering
     * identical to the reference (flush before offset save,
     * `OdsBaseLogApp.scala:194,205`).
+    *
+    * This query may set Spark 4.1.2's `asyncProgressTrackingEnabled`
+    * option, which writes the offset and commit logs off the batch's
+    * critical path: Spark allows it only for a stateless query,
+    * without a `Once` or `AvailableNow` trigger, into the Kafka,
+    * memory, console or noop sink, and this query is all of those.
+    * `CdcPipeline.start` is not: Spark rejects the option on a
+    * `foreachBatch` sink. The option is not set: its gain is
+    * unmeasured, and measuring it needs a Kafka broker and the
+    * spark-sql-kafka connector.
     */
   def start(
       spark: SparkSession,

@@ -135,6 +135,36 @@ class CdcSpec extends SparkSpec {
     assert(reads.value == 2L)
   }
 
+  test("processBatch routes no envelope whose data did not parse: " +
+      "not JSON, truncated, data not an object, data missing") {
+    val valid = Seq(
+      """{"table":"order_info","type":"insert","data":{"id":"1"}}""",
+      """{"table":"user_info","type":"update","data":{"id":"2"}}""")
+    // each bad envelope names a routed table, so only its data keeps
+    // it out; from_json nulls a drifted data and keeps table and type
+    val bad = Seq(
+      "not json",
+      """{"table":"order_info","type":"insert","data":{"id":"3"""",
+      """{"table":"order_info","type":"insert","data":[1]}""",
+      """{"table":"user_info","type":"update","data":[1]}""",
+      """{"table":"order_info","type":"insert"}""",
+      """{"table":"user_info","type":"update"}""")
+    val batch = spark.sparkContext.parallelize(valid ++ bad, 2)
+      .toDF("value")
+    val routing = Seq(("order_info", "fact"), ("user_info", "dim"))
+      .toDF("table_name", "kind")
+    var facts = Seq.empty[(String, String)]
+    var dims = Seq.empty[(String, String)]
+    graft.streaming.CdcPipeline.processBatch(batch, routing,
+      f => facts = f.collect().map(r => (r.getString(0), r.getString(1))).toSeq,
+      d => dims = d.select(col("table"), col("data")("id"))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq)
+    // no tombstone (null value) fact and no null-id dim: the bad
+    // envelopes are dropped, silently until a dead-letter topic exists
+    assert(facts == Seq(("ORDER_INFO_I", """{"id":"1"}""")))
+    assert(dims == Seq(("user_info", "2")))
+  }
+
   /** Ten envelopes, five routed fact and five routed dim, in two
     * partitions, with the routing list for them.
     */

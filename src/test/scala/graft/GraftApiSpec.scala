@@ -579,8 +579,7 @@ class GraftApiSpec extends SparkSpec {
     // internal staging / differential-test references, not user ops
     val whitelist = Set("exactDedupWindow", "docShingles", "unitized",
       // package-private plumbing (reflection sees it as public):
-      // the (doc_id, pos) rows shared by bloomDedupFpr and the
-      // streaming BloomGate
+      // the (doc_id, pos) rows bloomDedupFpr counts
       "bloomPositions",
       // graph-nodes half of dupClustersPartitioned, factored out so
       // dupClusters' small-graph gate can persist it before the

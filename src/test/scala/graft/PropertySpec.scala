@@ -1187,26 +1187,4 @@ class PropertySpec extends SparkSpec {
         s"query $q: $c at 0.9 > ${loose(q)} at 0.2")
     }
   }
-
-  test("DupDeliveryMonitor folds conserve messages and eviction " +
-      "conserves the accumulators on random hash batches") {
-    import graft.streaming.DupDeliveryMonitor
-    val hGen = Gen.listOfN(60, Gen.choose(0L, 20L))
-    forAll(hGen, n = 10) { hs =>
-      val m = DupDeliveryMonitor.foldBatch(Map.empty, hs)
-      assert(m.values.sum === hs.size.toLong)
-      assert(m.keySet === hs.toSet)
-      val (kept, dMsgs, dUniq, dMax) =
-        DupDeliveryMonitor.evict(m, 5)
-      assert(kept.size <= 5)
-      assert(kept.values.sum + dMsgs === hs.size.toLong)
-      assert(kept.size + dUniq === m.size.toLong)
-      if (m.size > 5) {
-        // evicted counts never exceed any retained count
-        assert(dMax <= kept.values.min)
-      } else {
-        assert((dMsgs, dUniq, dMax) === ((0L, 0L, 0L)))
-      }
-    }
-  }
 }
