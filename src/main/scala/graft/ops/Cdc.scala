@@ -16,11 +16,12 @@ import graft.schemas.Gmall
   * Pure DataFrame transforms shared by batch and streaming; the
   * reference's per-record if/else inside `foreachPartition` becomes
   * filter/when and an `isin` probe against the routing list, all
-  * narrow. Last-write-wins has two forms: [[lastWriteWinsInPartition]]
-  * (the reference's per-partition Redis `SET` order, no shuffle; the
-  * streaming pipeline's) and [[lastWriteWins]] (an explicit order
-  * column across partitions, one shuffle on the key; the batch
-  * queries').
+  * narrow. Last-write-wins is one rule, the last row per key in a
+  * partition's row order wins (the reference's per-partition Redis
+  * `SET` order), with two entry points: [[lastWriteWinsInPartition]]
+  * applies it as rows arrive, with no shuffle (the streaming
+  * pipeline's), and [[lastWriteWins]] applies it after one shuffle on
+  * the key and a sort on an explicit order (the batch queries').
   */
 object Cdc {
 
@@ -148,8 +149,8 @@ object Cdc {
   /** Keyed compaction honoring tombstones: newest row per key wins,
     * and if the newest is a delete the key disappears entirely —
     * the materialized-view semantics of a keyed store fed by CDC.
-    * [[lastWriteWins]] (greatest `order` per key across partitions)
-    * then a map-side tombstone filter.
+    * [[lastWriteWins]] (the last write per key in `order`, across
+    * partitions), then a tombstone filter over its rows.
     */
   def compactWithTombstones(
       df: DataFrame,
@@ -176,26 +177,31 @@ object Cdc {
         col("old_value"),
         element_at(col("data"), col("col_name")).as("new_value"))
 
-  /** R4 (`OdsBaseDbApp.scala:139-166`): keyed last-write-wins
-    * compaction — the batch/shuffle form of the reference's Redis
-    * point upsert. The rule: per key, the row with the greatest
-    * `order` wins, across all partitions. One shuffle on the key,
-    * then a per-key window; with AQE skew handling this is the
-    * standard 100 TB-safe dedup. Only batch code runs it
-    * (`q_cdc_dim_lww`, [[compactWithTombstones]], [[applySnapshot]]);
-    * the `max_by` aggregate it was kept over lost 7 of 10 `cdc_mixed`
-    * pairs while the streaming dim sink still ran this form.
+  /** R4 (`OdsBaseDbApp.scala:139-166`): keyed last-write-wins across
+    * partitions. The rule is the stream's, [[lastWriteWinsInPartition]],
+    * on rows clustered by key (`repartition(keys)`, one shuffle) and
+    * sorted by `order` within each partition, so the last write per
+    * key in `order` wins. `order` must be unique per key (CDC
+    * offsets/ids are); on a tie the surviving row is whichever the
+    * sort put last. Only batch code runs it (`q_cdc_dim_lww`,
+    * [[compactWithTombstones]], [[applySnapshot]]). Its costs:
+    *  - the shuffle's map stage runs when the frame is built, not at
+    *    its first action: the pass reads `queryExecution.toRdd`, and
+    *    under AQE that runs the map stage;
+    *  - no map-side pre-filter: a `row_number` window plan shuffles
+    *    only each map partition's survivors (`WindowGroupLimit`
+    *    `Partial` before its exchange); this shuffles every row;
+    *  - no spill: the hash map holds one row per distinct key of a
+    *    shuffle partition and does not spill, where a window's sort
+    *    does. In the stream, the micro-batch bounds that map.
     */
   def lastWriteWins(
       df: DataFrame,
       keys: Seq[Column],
       order: Seq[Column]
-  ): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(order.map(_.desc): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  ): DataFrame =
+    lastWriteWinsInPartition(
+      df.repartition(keys: _*).sortWithinPartitions(order: _*), keys)
 
   /** R4 as the reference runs it (`OdsBaseDbApp.scala:139-166`, a
     * Redis `SET` per record in partition order). The rule: within each
@@ -206,7 +212,8 @@ object Cdc {
     *
     * A key whose rows sit in two partitions keeps one row per
     * partition, so this is last-write-wins only when each key's
-    * writes stay in one partition (see `CdcPipeline`). The pass reads
+    * writes stay in one partition (see `CdcPipeline`;
+    * [[lastWriteWins]] shuffles them there first). The pass reads
     * and returns catalyst rows, so every row keeps its bytes (a
     * `Row`-encoder round trip would turn a map column into a Scala
     * map and reorder its keys).
@@ -295,11 +302,11 @@ object Cdc {
     * sibling of [[maintainSumCount]] (that one maintains an
     * AGGREGATE; this one maintains the TABLE): apply a CDC delta
     * batch to a unique-keyed base snapshot, producing the post-delta
-    * snapshot. Within the batch the LAST op per key wins, by
-    * [[lastWriteWins]] (greatest `order` per key across partitions;
-    * `order` — CDC offsets/ids — must be unique per key, so U-then-D
-    * nets to absent and D-then-I nets to the re-inserted row); keys
-    * untouched by the delta pass through by anti-join.
+    * snapshot. Within the batch the LAST op per key in `order` wins,
+    * by [[lastWriteWins]] (`order` — CDC offsets/ids — must be unique
+    * per key, so U-then-D nets to absent and D-then-I nets to the
+    * re-inserted row); keys untouched by the delta pass through by
+    * anti-join.
     *
     * `delta` carries the base's payload columns plus `op` and the
     * order column. Cost shape: one delta-keyed compaction + one

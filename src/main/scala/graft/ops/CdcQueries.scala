@@ -203,7 +203,8 @@ object CdcQueries {
         .orderBy(col("id"))),
     // R4: dim last-write-wins — latest row per uid among dim-routed
     // rows (reference: Redis point upsert DIM:{TABLE}:{id}), by the
-    // window form: greatest id per uid across partitions.
+    // stream's per-partition rule behind a shuffle on uid and a sort
+    // on id: the greatest id per uid wins.
     "q_cdc_dim_lww" -> ((s, d) => {
       val dims = Cdc.routeMatching(normalized(s, d), routing(s), "dim")
         .select(

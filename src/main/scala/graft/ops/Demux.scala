@@ -44,30 +44,6 @@ object Demux {
   private def envelope(v: Column): Column =
     Bridge.column(ReadJsonStruct(Bridge.expression(v), Gmall.logEnvelopeSchema))
 
-  /** Quarantine branch for records the envelope parse rejects: not
-    * JSON at all, or JSON that lacks every envelope section. The
-    * reference discards these inside its per-record try/catch
-    * (`OdsBaseLogApp.scala` fastjson parse); this gives each a
-    * reason instead of dropping it silently. It is a batch function
-    * that no pipeline runs yet: `LogPipeline` drops these lines as the
-    * reference does, with no dead-letter topic. Map-side only.
-    */
-  def quarantine(raw: DataFrame): DataFrame = {
-    val v = col("value").cast("string")
-    raw
-      .select(v.as("raw_value"), envelope(v).as("j"))
-      // the PERMISSIVE parse yields an all-null struct (not null) on
-      // bad input, so JSON validity needs its own probe
-      .withColumn("reason",
-        when(get_json_object(col("raw_value"), "$").isNull,
-          lit("not_json"))
-          .when(col("j.common").isNull && col("j.err").isNull &&
-            col("j.page").isNull && col("j.start").isNull,
-            lit("no_envelope_section")))
-      .filter(col("reason").isNotNull)
-      .select(col("raw_value"), col("reason"))
-  }
-
   val ErrorTopic   = "DWD_ERROR_LOG"
   val PageTopic    = "DWD_PAGE_LOG"
   val DisplayTopic = "DWD_PAGE_DISPLAY"

@@ -146,6 +146,7 @@ class DemuxSpec extends SparkSpec {
   // malformed and drifted envelopes: the parse's fallback path
   private val notJson = "not json {{"
   private val truncated = pageJson.take(pageJson.length / 2)
+  private val wrongShape = """{"some":"json","but":"wrong shape"}"""
   private val driftedDisplays =
     pageJson.replaceFirst("\"displays\":\\[.*?\\],", "\"displays\":{},")
   private val badDuringTime =
@@ -210,7 +211,7 @@ class DemuxSpec extends SparkSpec {
       env(5, err, start),                           // err only
       env(6, page, start),                          // page + start
       env(7),                                       // bare: nothing
-      notJson, truncated,                           // nothing
+      notJson, truncated, wrongShape,               // nothing
       env(8, page, "\"displays\":{}"),              // drifted array
       env(9, "\"page\":{\"page_id\":\"p\",\"during_time\":\"abc\"}"))
     val onePass = multiset(
@@ -220,7 +221,7 @@ class DemuxSpec extends SparkSpec {
       Map(Demux.ErrorTopic -> 2, Demux.PageTopic -> 5,
         Demux.DisplayTopic -> 3, Demux.StartTopic -> 1))
     assert(graft.streaming.LogPipeline.demuxToTopicValue(
-      textLines(notJson, truncated)).isEmpty)
+      textLines(notJson, truncated, wrongShape)).isEmpty)
     // the null display element still emits a record, with no element
     // fields (to_json drops nulls)
     assert(onePass.contains((Demux.DisplayTopic,
@@ -261,25 +262,6 @@ class DemuxSpec extends SparkSpec {
     val errd = topicsOf(s"""{$common,"err":{"error_code":1},""" +
       """"page":{"page_id":"p"},"start":{"entry":"e"},"ts":2}""")
     assert(errd.map(_._1) == Seq(Demux.ErrorTopic))
-  }
-
-  test("quarantine routes malformed lines with a reason, keeps good ones out") {
-    val lines = Seq(
-      """{"common":{"mid":"m1"},"page":{"page_id":"p"},"ts":1}""", // good
-      """not json at all {{""",                                    // broken
-      """{"some":"json","but":"wrong shape"}""",                   // no section
-      """{"common":{"mid":"m2"},"err":{"error_code":1},"ts":2}"""  // good
-    ).toDF("value")
-    val q = Demux.quarantine(lines).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(q.size == 2)
-    assert(q("""not json at all {{""") == "not_json")
-    assert(q("""{"some":"json","but":"wrong shape"}""") ==
-      "no_envelope_section")
-    // every quarantined line is invisible to the demux branches
-    val parsed = parsedOf(lines.as[String].collect().toSeq: _*)
-    assert(Demux.pages(parsed).count() == 1)
-    assert(Demux.errors(parsed).count() == 1)
   }
 
   test("keyProfile: per-key presence counts/ppm; unexpected keys " +

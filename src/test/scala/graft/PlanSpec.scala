@@ -13,6 +13,17 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Every shuffle in an RDD's lineage, for frames whose executed plan
+    * is a scan over an RDD built by hand.
+    */
+  private def shuffles(rdd: org.apache.spark.rdd.RDD[_])
+      : Seq[org.apache.spark.ShuffleDependency[_, _, _]] =
+    rdd.dependencies.flatMap {
+      case s: org.apache.spark.ShuffleDependency[_, _, _] =>
+        s +: shuffles(s.rdd)
+      case d => shuffles(d.rdd)
+    }
+
   test("filter + projection push into the parquet scan") {
     val p = plan(
       Tables.lineitem(spark, sf("sf0.001"))
@@ -411,8 +422,6 @@ class PlanSpec extends SparkSpec {
   test("CDC micro-batch: the frames handed to the sinks have no " +
       "broadcast, join, shuffle or window") {
     import spark.implicits._
-    import org.apache.spark.ShuffleDependency
-    import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -441,11 +450,6 @@ class PlanSpec extends SparkSpec {
       sink("fact"), sink("dim"))
     assert(frames.keySet == Set("fact", "dim"))
     val h = new AdaptiveSparkPlanHelper {}
-    def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
-      rdd.dependencies.flatMap {
-        case s: ShuffleDependency[_, _, _] => Seq(s)
-        case d => shuffles(d.rdd)
-      }
     frames.foreach { case (name, df) =>
       val p = df.queryExecution.executedPlan
       assert(h.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty,
@@ -470,5 +474,22 @@ class PlanSpec extends SparkSpec {
     val plans = frames.values.map(_.queryExecution.executedPlan)
     assert(plans.map(parses).sum == 1,
       s"expected one from_json across the sinks:\n${plans.mkString("\n")}")
+  }
+
+  test("batch last-write-wins: no window, and one shuffle in the " +
+      "rows' lineage") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = spark.sparkContext.parallelize(Seq(
+      ("k1", 1L), ("k2", 2L), ("k1", 3L), ("k2", 4L)), 2).toDF("k", "v")
+    val out = ops.Cdc.lastWriteWins(df, Seq(col("k")), Seq(col("v")))
+    val p = out.queryExecution.executedPlan
+    assert(new AdaptiveSparkPlanHelper {}.collect(p) {
+      case w: WindowExec => w }.isEmpty, s"window:\n$p")
+    // the executed plan is a scan over the compaction's RDD, so the
+    // shuffle shows only in its lineage
+    val rdd = out.queryExecution.toRdd
+    assert(shuffles(rdd).size == 1, rdd.toDebugString)
   }
 }

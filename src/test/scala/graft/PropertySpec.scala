@@ -64,15 +64,21 @@ class PropertySpec extends SparkSpec {
   test("LWW compaction: exactly one survivor per key, the max-order one") {
     forAll(Gen.nonEmptyListOf(Gen.zip(Gen.choose(0, 5), Gen.choose(0, 100)))) {
       pairs =>
-        val df = pairs.zipWithIndex
+        val rows = pairs.zipWithIndex
           .map { case ((k, v), i) => (k.toLong, v.toLong, i.toLong) }
-          .toDF("k", "v", "seq")
-        val out = Cdc.lastWriteWins(df, Seq(col("k")), Seq(col("seq")))
-          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
         val expect = pairs.zipWithIndex
           .groupBy(_._1._1).map { case (k, xs) =>
             k.toLong -> xs.map(_._2.toLong).max }
-        assert(out == expect)
+        // rows dealt round-robin over 1-4 partitions, so a key's
+        // writes span partitions
+        (1 to 4).foreach { parts =>
+          val df = spark.sparkContext.parallelize(0 until parts, parts)
+            .flatMap(p => rows.filter(_._3 % parts == p))
+            .toDF("k", "v", "seq")
+          val out = Cdc.lastWriteWins(df, Seq(col("k")), Seq(col("seq")))
+            .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+          assert(out == expect, s"over $parts partitions")
+        }
     }
   }
 
